@@ -183,10 +183,11 @@ class Index:
           deep-pagination cost model: page P costs P*k, which is why
           this is bounded to small offsets by DEFAULT_QUERY_LIMIT-style
           sanity rather than a cursor), then slices driver-side.
-        * ``"aggs"``: search aggregations (terms / histogram /
-          date_histogram / stats / percentiles / cardinality) over the
-          FULL match set — see Searcher.aggregations for the DSL and
-          the single-join execution shape.
+        * ``"aggs"``: search aggregations over the FULL match set (the
+          kinds of the ``Searcher._AGGS`` registry) — see
+          Searcher.aggregations for the DSL and the single-join
+          execution shape.  Every agg is validated before any Spark
+          work.
         * ``"search_after"``: ``[last_score, last_docid]`` from the
           previous page's final hit — cursor pagination.  Unlike
           offset this is a pure filter on the sort key (page P never
@@ -202,7 +203,8 @@ class Index:
         * ``"track_total_hits"``: add ``{"total": {"value": N,
           "relation": "eq"}}`` — an EXACT count-collector pass (ES caps
           at 10k/"gte" by default; the engine's count is one pruned
-          projection, so exact is affordable).
+          projection, so exact is affordable).  With facets/aggs it
+          counts their persisted candidate scan, beside them.
         """
         body = search.get("query")
         knn = search.get("knn")
@@ -299,14 +301,17 @@ class Index:
                 "min_score cannot combine with facets/aggs/"
                 "track_total_hits here (the threshold would not reach "
                 "them — ES filters all collectors)")
+        facets = search.get("facets") or {}
+        aggs = search.get("aggs") or {}
         total = None
-        if track:
+        if track and not (facets or aggs):
             # exact distributed count of the match set (the reference's
             # count collector; ES default caps at 10k/"gte" — this
             # engine's count is one pruned-projection aggregation, so
             # exact/"eq" is affordable and more useful).  Counts the
             # QUERY node (post_filter never shrinks totals, the ES
             # rule) — already resolved, so no second mget/expansion.
+            # With facets/aggs it is one more collector, below.
             total = {"value": int(self._count_node(node)),
                      "relation": "eq"}
 
@@ -346,8 +351,6 @@ class Index:
         depth = offset + limit
         s = self.searcher()
         sort_by = search.get("sort_by")
-        facets = search.get("facets") or {}
-        aggs = search.get("aggs") or {}
         if (facets or aggs) and (search.get("rescore")
                                  or search.get("collapse")):
             # refuse rather than silently dropping one of them — the
@@ -355,6 +358,8 @@ class Index:
             # wrong answer is worse than an error
             raise A.QueryError(
                 "rescore/collapse cannot combine with facets/aggs here")
+        if aggs:
+            s.check_aggs(aggs)  # every agg check, before any Spark work
         if facets or aggs:
             # MultiCollector (search.rs:32-42): facet counting and
             # aggregations need ALL matches (segment pruning is
@@ -400,6 +405,13 @@ class Index:
                                 if aggs else None)
                     out: dict[str, Any] = {"docs": _page(fut_hits.result()),
                                            "facets": {}}
+                    if track:
+                        # the count collector over the same persisted
+                        # scan of the QUERY node, while facets/aggs run:
+                        # after the hit page, so it reads the loaded
+                        # cache instead of paying its own load job
+                        total = {"value": int(cand.count()),
+                                 "relation": "eq"}
                     if fut_facets is not None:
                         out["facets"] = fut_facets.result()
                     if fut_aggs is not None:

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import math
 
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,6 +72,67 @@ _SKEW_SPREAD = 8
 _SKEW_MIN_SAVED_BYTES = 6 << 20
 _PHRASE_ROW_BYTES = 64  # (segment, docid, positions[]) exchange row
 _BOOL_ROW_BYTES = 16    # (segment, docid, score) exchange row
+
+# Aggregation vocabulary (Searcher._AGGS).  Bucket parents take metric
+# sub-aggs; pipe parents also take parent pipeline sub-aggs and, with
+# composite, feed sibling pipeline aggs.
+_NUMERIC = ("i64", "u64", "f64")
+_STATS = ("count", "min", "max", "avg", "sum")
+_BUCKET_PARENTS = ("terms", "histogram", "date_histogram", "composite",
+                   "multi_terms", "global", "sampler", "diversified_sampler")
+_PIPE_PARENTS = ("terms", "histogram", "date_histogram")
+_CALENDAR_INTERVALS = {
+    "minute": "minute", "hour": "hour", "day": "day", "week": "week",
+    "month": "month", "quarter": "quarter", "year": "year",
+}
+# auto_date_histogram's unit ladder, seconds per unit (month=30d,
+# year=365d — an estimate is fine: it only picks the unit)
+_AUTO_UNITS = (("second", 1), ("minute", 60), ("hour", 3600),
+               ("day", 86400), ("month", 2592000), ("year", 31536000))
+
+
+class _Agg(NamedTuple):
+    """One aggregation kind: its validation and its plan.
+
+    ``check(searcher, name, kind, body, aggs)`` runs before any Spark
+    work, raises QueryError on a bad body and returns the stored fields
+    the kind reads from the doc-store join.  ``plan(searcher, name,
+    kind, body, matched, cands)`` returns the ES payload.  The rest
+    parameterise the shared check and plans: ``types`` / ``rule`` (the
+    field types and extra body rule of ``_check_field``), ``exprs`` /
+    ``shape`` / ``nonnull`` (a single-row metric's aggregate expressions
+    over its field, their driver-side shaping — by default the row as a
+    dict — and whether null rows drop first, for ``_plan_metric``).  A
+    ``sibling`` kind's plan is instead a driver-side reduce
+    ``plan(searcher, kind, body, values, pairs)`` over another agg's
+    final buckets."""
+    check: Callable
+    plan: Callable
+    types: tuple = ()
+    rule: Callable | None = None
+    exprs: Callable | None = None
+    shape: Callable = lambda row, body: row.asDict()
+    nonnull: bool = False
+    sibling: bool = False
+
+
+def _stats_cols(c: Column, prefix: str = "") -> list[Column]:
+    """count/min/max/avg/sum of ``c``, aliased ``prefix + stat``."""
+    return [getattr(F, k)(c).alias(prefix + k) for k in _STATS]
+
+
+def _opt_float(v) -> float | None:
+    return None if v is None else float(v)
+
+
+def _percents(body: dict) -> list[float]:
+    return [float(p) for p in body.get("percents", [1, 5, 25, 50, 75, 95, 99])]
+
+
+def _pctl_fn(body: dict):
+    """Exact interpolated percentiles by default (deterministic,
+    oracle-matchable); ``"approx": true`` picks the one-pass sketch."""
+    return F.percentile_approx if body.get("approx") else F.percentile
 
 
 class Searcher:
@@ -2621,44 +2682,23 @@ class Searcher:
             .groupBy(child.alias("facet")).agg(F.count("*").alias("count"))
         )
 
-    _CALENDAR_INTERVALS = {
-        "minute": "minute", "hour": "hour", "day": "day", "week": "week",
-        "month": "month", "quarter": "quarter", "year": "year",
-    }
-
     def aggregations(self, node: A.Node, aggs: dict,
                      cands: DataFrame | None = None) -> dict:
         """ES-style search aggregations over the FULL match set of
         ``node`` (BEYOND-REFERENCE — toshi exposes only the facet
         collector, search.rs:32-42; these are the next collectors an ES
-        user reaches for).  ``aggs`` is the ES request shape::
+        user reaches for).  ``aggs`` is the ES request shape
+        ``{name: {kind: body}}``.  The supported kinds are the keys of
+        ``_AGGS``; each entry holds its kind's validation and plan, and
+        ``check_aggs`` runs every validation before any Spark work.
 
-            {name: {"terms":          {"field": f, "size": 10}},
-             name: {"histogram":      {"field": f, "interval": 50}},
-             name: {"date_histogram": {"field": f, "calendar_interval": "day"}},
-             name: {"stats":          {"field": f}},
-             name: {"percentiles":    {"field": f, "percents": [..],
-                                       "approx": False}},
-             name: {"cardinality":    {"field": f, "exact": False}},
-             name: {"avg"|"sum"|"min"|"max"|"value_count": {"field": f}},
-             name: {"missing":        {"field": f}},
-             name: {"filters":        {"filters": {fname: {..query..}}}},
-             name: {"rare_terms":     {"field": f, "max_doc_count": 1}},
-             name: {"multi_terms":    {"terms": [{"field": f}, ..]}},
-             name: {"adjacency_matrix": {"filters": {fname: {..}}}},
-             name: {"weighted_avg":   {"value": {"field": v},
-                                       "weight": {"field": w}}},
-             name: {"median_absolute_deviation": {"field": f}},
-             name: {"boxplot":        {"field": f}},
-             name: {"string_stats":   {"field": f,
-                                       "show_distribution": False}}}
-
-        Bucket aggs (terms / histogram / date_histogram) take metric
-        sub-aggs (avg/sum/min/max/value_count/stats/cardinality) via an
-        in-body or ES-sibling ``"aggs"`` block — computed as extra
-        expressions in the bucket's own groupBy (one hash aggregation,
-        zero additional passes); a terms agg additionally takes ONE
-        ``top_hits`` sub-agg (per-bucket document fetch).
+        Bucket aggs (``_BUCKET_PARENTS``) take metric sub-aggs
+        (avg/sum/min/max/value_count/stats/cardinality) via an in-body
+        or ES-sibling ``"aggs"`` block — computed as extra expressions
+        in the bucket's own aggregation (zero additional passes);
+        terms / histogram / date_histogram also take parent pipeline
+        sub-aggs, and a terms agg ONE ``top_hits`` sub-agg (per-bucket
+        document fetch).
 
         Execution shape (the part that must survive 100×): ONE equi-join
         of the candidate set to the doc store on (segment_id, docid) —
@@ -2677,343 +2717,7 @@ class Searcher:
         sketch (approx_count_distinct, the ES semantics and the shape
         that scales); ``"exact": true`` switches to an exact distinct
         count."""
-        # accept the ES sibling shape {kind: {...}, "aggs": {...}} by
-        # folding the sub-agg block into the kind body (the in-body
-        # form {"terms": {..., "aggs": {...}}} stays supported)
-        norm: dict = {}
-        for name, spec in aggs.items():
-            if isinstance(spec, dict) and len(spec) == 2 and "aggs" in spec:
-                (kind, body), = ((k, v) for k, v in spec.items()
-                                 if k != "aggs")
-                if not isinstance(body, dict):
-                    raise A.QueryError(f"agg {name!r}: expected a dict body")
-                body = dict(body)
-                body["aggs"] = spec["aggs"]
-                norm[name] = {kind: body}
-            else:
-                norm[name] = spec
-        aggs = norm
-        fields: set[str] = set()
-        for name, spec in aggs.items():
-            if not isinstance(spec, dict) or len(spec) != 1:
-                raise A.QueryError(f"agg {name!r}: expected one agg kind")
-            kind, body = next(iter(spec.items()))
-            if kind == "filters":
-                flt = (body or {}).get("filters")
-                if not isinstance(flt, dict) or not flt:
-                    raise A.QueryError(
-                        f"agg {name!r}: filters needs a dict of named "
-                        f"filter queries")
-                for fname, q in flt.items():  # fail at parse time
-                    A.parse_json(q, self.schema)
-                continue
-            if kind == "global":
-                # ES global agg: one bucket over the WHOLE index,
-                # ignoring the query — only meaningful with sub-aggs
-                metrics, th = self._sub_agg_plan(name, body or {})
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_hits is not supported "
-                        f"under global")
-                if self._pipe_agg_plan(name, body or {}):
-                    raise A.QueryError(
-                        f"agg {name!r}: pipeline sub-aggs need a "
-                        f"bucket agg parent")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    if skind in ("avg", "sum", "min", "max", "stats") \
-                            and sdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: "
-                            f"{skind} needs a numeric field, "
-                            f"{sf!r} is {sdef.type}")
-                continue  # runs off its own all-docs frame, not matched
-            if kind in self._SIBLING_KINDS:
-                # ES sibling pipeline agg: reduces ANOTHER agg's bucket
-                # list ("parent>path"), deferred until parents ran
-                path = (body or {}).get("buckets_path", "")
-                parent = path.split(">", 1)[0]
-                if ">" not in path or parent not in aggs:
-                    raise A.QueryError(
-                        f"agg {name!r}: {kind} needs buckets_path "
-                        f"'<sibling bucket agg>>metric'")
-                pkind = next(iter(aggs[parent]))
-                if pkind not in ("terms", "histogram", "date_histogram",
-                                 "composite"):
-                    raise A.QueryError(
-                        f"agg {name!r}: buckets_path parent {parent!r} "
-                        f"is not a bucket agg")
-                continue
-            if kind == "composite":
-                sources = (body or {}).get("sources")
-                if not isinstance(sources, list) or not sources:
-                    raise A.QueryError(
-                        f"agg {name!r}: composite needs a sources list")
-                for s in sources:
-                    if not isinstance(s, dict) or len(s) != 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: each composite source is "
-                            f"{{name: {{'terms': {{'field': ..}}}}}}")
-                    (sname, sspec), = s.items()
-                    sf = (sspec or {}).get("terms", {}).get("field") \
-                        if isinstance(sspec, dict) else None
-                    if not sf:
-                        raise A.QueryError(
-                            f"agg {name!r}: composite source {sname!r}: "
-                            f"only terms sources are supported")
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: composite source {sname!r}: "
-                            f"field {sf!r} is not a stored field")
-                    fields.add(sf)
-                metrics, th = self._sub_agg_plan(name, body)
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_hits is not supported "
-                        f"under composite")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    fields.add(sf)
-                continue
-            if kind == "multi_terms":
-                tlist = (body or {}).get("terms")
-                if not isinstance(tlist, list) or len(tlist) < 2:
-                    raise A.QueryError(
-                        f"agg {name!r}: multi_terms needs a list of >= 2 "
-                        f"{{'field': ..}} terms")
-                for t in tlist:
-                    tf = (t or {}).get("field") if isinstance(t, dict) \
-                        else None
-                    if not tf:
-                        raise A.QueryError(
-                            f"agg {name!r}: each multi_terms term is "
-                            f"{{'field': ..}}")
-                    tdef = self.schema.field(tf)
-                    if tdef is None or not tdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {tf!r} is not a "
-                            f"stored field")
-                    fields.add(tf)
-                metrics, th = self._sub_agg_plan(name, body)
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: a top_hits sub-agg is only "
-                        f"supported under a terms agg")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    fields.add(sf)
-                continue
-            if kind in ("sampler", "diversified_sampler"):
-                ss = int((body or {}).get("shard_size", 100))
-                if ss <= 0:
-                    raise A.QueryError(
-                        f"agg {name!r}: sampler shard_size must be > 0")
-                if kind == "diversified_sampler":
-                    divf = (body or {}).get("field")
-                    ddef = self.schema.field(divf) if divf else None
-                    if ddef is None or not ddef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: diversified_sampler needs a "
-                            f"stored dedup field, {divf!r} is not one")
-                    if int((body or {}).get("max_docs_per_value", 1)) < 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: max_docs_per_value must "
-                            f"be >= 1")
-                metrics, th = self._sub_agg_plan(name, body or {})
-                if th is not None:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_hits is not supported "
-                        f"under sampler")
-                if self._pipe_agg_plan(name, body or {}):
-                    raise A.QueryError(
-                        f"agg {name!r}: pipeline sub-aggs need a "
-                        f"bucket agg parent")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                continue  # fields join happens off the SAMPLE frame
-            if kind == "top_metrics":
-                mlist = (body or {}).get("metrics")
-                if isinstance(mlist, dict):
-                    mlist = [mlist]
-                srt = (body or {}).get("sort")
-                if not isinstance(mlist, list) or not mlist \
-                        or not isinstance(srt, dict) or len(srt) != 1:
-                    raise A.QueryError(
-                        f"agg {name!r}: top_metrics needs metrics "
-                        f"[{{'field': ..}}] and sort {{field: asc|desc}}")
-                (sfield, sdir), = srt.items()
-                if str(sdir).lower() not in ("asc", "desc"):
-                    raise A.QueryError(
-                        f"agg {name!r}: sort direction must be asc|desc")
-                for mf in [m.get("field") for m in mlist] + [sfield]:
-                    mdef = self.schema.field(mf) if mf else None
-                    if mdef is None or not mdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {mf!r} is not a "
-                            f"stored field")
-                    fields.add(mf)
-                continue
-            if kind == "t_test":
-                ttype = str((body or {}).get("type", "heteroscedastic"))
-                if ttype not in ("paired", "homoscedastic",
-                                 "heteroscedastic"):
-                    raise A.QueryError(
-                        f"agg {name!r}: t_test type must be paired/"
-                        f"homoscedastic/heteroscedastic")
-                for part in ("a", "b"):
-                    pf = ((body or {}).get(part) or {}).get("field")
-                    pdef = self.schema.field(pf) if pf else None
-                    if pdef is None or not pdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: t_test needs a.field and "
-                            f"b.field (stored), {pf!r} is not")
-                    if pdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: t_test needs numeric "
-                            f"fields, {pf!r} is {pdef.type}")
-                    fields.add(pf)
-                continue
-            if kind == "matrix_stats":
-                mfields = (body or {}).get("fields")
-                if not isinstance(mfields, list) or len(mfields) < 2:
-                    raise A.QueryError(
-                        f"agg {name!r}: matrix_stats needs >= 2 fields")
-                for mf in mfields:
-                    mdef = self.schema.field(mf) if mf else None
-                    if mdef is None or not mdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {mf!r} is not a "
-                            f"stored field")
-                    if mdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: matrix_stats needs numeric "
-                            f"fields, {mf!r} is {mdef.type}")
-                    fields.add(mf)
-                continue
-            if kind == "weighted_avg":
-                for part in ("value", "weight"):
-                    pf = ((body or {}).get(part) or {}).get("field")
-                    if not pf:
-                        raise A.QueryError(
-                            f"agg {name!r}: weighted_avg needs "
-                            f"value.field and weight.field")
-                    pdef = self.schema.field(pf)
-                    if pdef is None or not pdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: field {pf!r} is not a "
-                            f"stored field")
-                    if pdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: weighted_avg needs numeric "
-                            f"fields, {pf!r} is {pdef.type}")
-                    fields.add(pf)
-                continue
-            if kind == "adjacency_matrix":
-                flt = (body or {}).get("filters")
-                if not isinstance(flt, dict) or not flt:
-                    raise A.QueryError(
-                        f"agg {name!r}: adjacency_matrix needs a dict "
-                        f"of named filter queries")
-                for fname, q in flt.items():
-                    if "&" in fname:
-                        raise A.QueryError(
-                            f"agg {name!r}: filter name {fname!r} may "
-                            f"not contain '&' (the intersection "
-                            f"separator)")
-                    A.parse_json(q, self.schema)  # fail at parse time
-                continue
-            f = (body or {}).get("field")
-            if not f:
-                raise A.QueryError(f"agg {name!r}: missing field")
-            fdef = self.schema.field(f)
-            if kind == "significant_terms":
-                # runs off the POSTINGS (term space), not the doc store
-                if fdef is None or not fdef.indexed:
-                    raise A.QueryError(
-                        f"agg {name!r}: significant_terms needs an "
-                        f"indexed field, {f!r} is not")
-                continue
-            if kind == "significant_text":
-                # re-ANALYZES the stored text of matched docs, so the
-                # field must be stored AND carry a tokenizer; the
-                # background stays the termdict (the field is indexed
-                # here — ES supports un-indexed text, this engine's
-                # background statistics come from its own postings)
-                if fdef is None or not fdef.stored \
-                        or not fdef.indexed or fdef.tokenizer is None:
-                    raise A.QueryError(
-                        f"agg {name!r}: significant_text needs a "
-                        f"stored indexed text field, {f!r} is not one")
-                continue
-            if fdef is None or not fdef.stored:
-                raise A.QueryError(
-                    f"agg {name!r}: field {f!r} is not a stored field")
-            # ES typing rules: numeric metrics/histograms need numeric
-            # fields, date_histogram needs a date — fail at parse time
-            # instead of as an executor-side ANSI cast error
-            if kind in ("stats", "extended_stats", "percentiles",
-                        "percentile_ranks", "histogram", "range",
-                        "avg", "sum", "min", "max",
-                        "median_absolute_deviation", "boxplot") \
-                    and fdef.type not in ("i64", "u64", "f64"):
-                raise A.QueryError(
-                    f"agg {name!r}: {kind} needs a numeric field, "
-                    f"{f!r} is {fdef.type}")
-            if kind in ("date_histogram", "auto_date_histogram") \
-                    and fdef.type != "date":
-                raise A.QueryError(
-                    f"agg {name!r}: {kind} needs a date field, "
-                    f"{f!r} is {fdef.type}")
-            if kind == "auto_date_histogram" \
-                    and int((body or {}).get("buckets", 10)) < 1:
-                raise A.QueryError(
-                    f"agg {name!r}: buckets must be >= 1")
-            if kind == "string_stats" and fdef.type != "text":
-                raise A.QueryError(
-                    f"agg {name!r}: string_stats needs a text field, "
-                    f"{f!r} is {fdef.type}")
-            if kind in ("terms", "histogram", "date_histogram"):
-                self._pipe_agg_plan(name, body)  # fail-fast validation
-                metrics, th = self._sub_agg_plan(name, body)
-                if th is not None and kind != "terms":
-                    raise A.QueryError(
-                        f"agg {name!r}: a top_hits sub-agg is only "
-                        f"supported under a terms agg")
-                for sub_name, skind, sf in metrics:
-                    sdef = self.schema.field(sf)
-                    if sdef is None or not sdef.stored:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: field "
-                            f"{sf!r} is not a stored field")
-                    if skind in ("avg", "sum", "min", "max", "stats") \
-                            and sdef.type not in ("i64", "u64", "f64"):
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: "
-                            f"{skind} needs a numeric field, "
-                            f"{sf!r} is {sdef.type}")
-                    fields.add(sf)
-            elif "aggs" in (body or {}):
-                raise A.QueryError(
-                    f"agg {name!r}: sub-aggs are only supported under "
-                    f"bucket aggs (terms/histogram/date_histogram)")
-            fields.add(f)
+        aggs, fields = self.check_aggs(aggs)
         if cands is None:
             cands = self.candidates(node)
         keys = cands.select("segment_id", "docid")
@@ -3029,11 +2733,10 @@ class Searcher:
                     and bound * _BYTES_PER_KEY <= _BCAST_KEY_BYTES_CAP:
                 keys = F.broadcast(keys)
             matched = keys.join(docs, on=["segment_id", "docid"]).persist()
-        else:  # significant_terms-only request: no doc-store join at all
+        else:  # no agg reads the joined doc store: no join at all
             matched = keys.persist()
         try:
             out: dict[str, Any] = {}
-            siblings: list[tuple[str, str, dict]] = []
 
             # one agg request = one closure; independent requests are
             # submitted concurrently below (guide §2.6) — each is its
@@ -3041,721 +2744,13 @@ class Searcher:
             # frame, so overlapping them fills the cluster instead of
             # serializing one job barrier per agg.  Writes go to
             # distinct ``out`` keys, so the shared dict is safe.
-            def _exec_one(name: str, kind: str, body) -> None:
-                if kind == "significant_terms":
-                    out[name] = self._sig_terms(body, matched)
-                    return
-                if kind == "significant_text":
-                    out[name] = self._sig_text(body, matched)
-                    return
-                if kind == "global":
-                    # whole-index bucket (tombstone-filtered like every
-                    # other surface): count + metric sub-aggs in ONE
-                    # aggregation over the all-docs candidate keys
-                    metrics, _ = self._sub_agg_plan(name, body or {})
-                    gkeys = (self.candidates(A.AllQ())
-                             .select("segment_id", "docid"))
-                    gfields = sorted({f for _, _, f in metrics})
-                    gm = gkeys
-                    if gfields:
-                        gdocs = self._table("docs").select(
-                            "segment_id", "docid", *gfields)
-                        gm = gkeys.join(gdocs, on=["segment_id", "docid"])
-                    row = gm.agg(F.count("*").alias("doc_count"),
-                                 *self._metric_exprs(metrics)).collect()[0]
-                    out[name] = {"doc_count": int(row["doc_count"]),
-                                 **self._shape_metrics(metrics, row)}
-                    return
-                if kind == "filters":
-                    # ES filters agg: one named bucket per sub-query,
-                    # each bucket counts matched docs ALSO matching the
-                    # filter — a left-semi join of the (persisted)
-                    # match keys against the filter's candidate keys,
-                    # so each filter costs one postings scan, never a
-                    # rescore of the main query
-                    mkeys = matched.select("segment_id", "docid")
-                    buckets = {}
-                    for fname, q in body["filters"].items():
-                        sub = A.parse_json(q, self.schema)
-                        skeys = (self.candidates(sub)
-                                 .select("segment_id", "docid"))
-                        buckets[fname] = {"doc_count": int(
-                            mkeys.join(skeys, on=["segment_id", "docid"],
-                                       how="left_semi").count())}
-                    out[name] = {"buckets": buckets}
-                    return
-                if kind == "composite":
-                    # ES composite agg: deterministic multi-source key
-                    # paging.  ONE hash aggregation on the source tuple
-                    # (map-side partials), then the after-key predicate
-                    # prunes BEFORE the ordered limit — page N costs one
-                    # agg + top-size under the key's total order, never
-                    # a depth-(N·size) re-rank, which is what pages a
-                    # 100 TB match set to exhaustion.
-                    snames, sfields = [], []
-                    for s in body["sources"]:
-                        (sname, sspec), = s.items()
-                        snames.append(sname)
-                        sfields.append(sspec["terms"]["field"])
-                    size = int(body.get("size", 10))
-                    after = body.get("after")
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    b = matched
-                    for sf in sfields:  # ES: missing any source → out
-                        b = b.filter(F.col(sf).isNotNull())
-                    g = (b.groupBy(*[F.col(sf).alias(sn)
-                                     for sn, sf in zip(snames, sfields)])
-                         .agg(F.count("*").alias("doc_count"),
-                              *self._metric_exprs(metrics)))
-                    if after:
-                        if set(after) != set(snames):
-                            raise A.QueryError(
-                                f"agg {name!r}: after key must name "
-                                f"every source")
-                        pred, eq = None, None
-                        for sn in snames:  # strict lexicographic >
-                            gt = F.col(sn) > F.lit(after[sn])
-                            step = gt if eq is None else eq & gt
-                            pred = step if pred is None else pred | step
-                            e = F.col(sn) == F.lit(after[sn])
-                            eq = e if eq is None else eq & e
-                        g = g.filter(pred)
-                    rows = (g.orderBy(*[F.asc(sn) for sn in snames])
-                            .limit(size).collect())
-                    buckets = [
-                        {"key": {sn: r[sn] for sn in snames},
-                         "doc_count": int(r["doc_count"]),
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    out[name] = {"buckets": buckets}
-                    if len(buckets) == size:
-                        out[name]["after_key"] = dict(buckets[-1]["key"])
-                    return
-                if kind == "multi_terms":
-                    # ES multi_terms: buckets keyed by a TUPLE of field
-                    # values — the same ONE hash aggregation as terms
-                    # (groupBy on the tuple), metric sub-aggs riding it;
-                    # a doc missing ANY key field falls out (ES rule)
-                    tfields = [t["field"] for t in body["terms"]]
-                    size = int(body.get("size", 10))
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    b = matched
-                    for tf in tfields:
-                        b = b.filter(F.col(tf).isNotNull())
-                    kcols = [F.col(tf).alias(f"__k{i}")
-                             for i, tf in enumerate(tfields)]
-                    grouped = (b.groupBy(*kcols)
-                               .agg(F.count("*").alias("doc_count"),
-                                    *self._metric_exprs(metrics)))
-                    rows = (grouped.orderBy(
-                        F.desc("doc_count"),
-                        *[F.asc(f"__k{i}") for i in range(len(tfields))])
-                        .limit(size).collect())
-                    buckets = [
-                        {"key": [r[f"__k{i}"]
-                                 for i in range(len(tfields))],
-                         "key_as_string": "|".join(
-                             str(r[f"__k{i}"])
-                             for i in range(len(tfields))),
-                         "doc_count": int(r["doc_count"]),
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    out[name] = {"buckets": buckets}
-                    return
-                if kind == "weighted_avg":
-                    # ES weighted_avg: sum(v*w)/sum(w) over rows where
-                    # BOTH are present — one aggregation, map-side
-                    # partials; null value with present weight counts
-                    # the weight only if value_missing is set (not
-                    # supported: nulls drop, the ES default)
-                    vf = F.col(body["value"]["field"]).cast("double")
-                    wf = F.col(body["weight"]["field"]).cast("double")
-                    both = matched.filter(vf.isNotNull()
-                                          & wf.isNotNull())
-                    r = both.agg(
-                        F.sum(vf * wf).alias("vw"),
-                        F.sum(wf).alias("w")).collect()[0]
-                    out[name] = {"value": (
-                        None if r["w"] is None or r["w"] == 0
-                        else float(r["vw"]) / float(r["w"]))}
-                    return
-                if kind in ("sampler", "diversified_sampler"):
-                    # ES sampler agg: sub-aggs over the best-scoring
-                    # shard_size docs PER SHARD.  The engine's shard is
-                    # the segment: ONE window over the scored candidate
-                    # set (rank by score desc, docid asc within each
-                    # segment — deterministic where ES is
-                    # shard-layout-dependent), then the doc-store join
-                    # and one aggregation over the sample only.  The
-                    # window is hash-partitioned by segment_id and
-                    # top-k bounded, so no executor ever sorts more
-                    # than one segment's matches.
-                    # diversified_sampler: same plan with ONE extra
-                    # window ranked per (segment, dedup-field value) —
-                    # keep max_docs_per_value best per value BEFORE the
-                    # shard_size cut (the ES de-duplication order); the
-                    # dedup field joins in ahead of the windows, null
-                    # values are exempt from the cap (the ES rule:
-                    # docs missing the field are not de-duplicated).
-                    from pyspark.sql import Window
-                    ss = int(body.get("shard_size", 100))
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    sample = cands.select("segment_id", "docid", "score")
-                    if kind == "diversified_sampler":
-                        divf = body["field"]
-                        mdv = int(body.get("max_docs_per_value", 1))
-                        ddocs = self._table("docs").select(
-                            "segment_id", "docid", divf)
-                        sample = sample.join(
-                            ddocs, on=["segment_id", "docid"], how="left")
-                        wv = Window.partitionBy(
-                            "segment_id", divf).orderBy(
-                            F.desc("score"), F.asc("docid"))
-                        sample = (sample
-                                  .withColumn("__rv", F.row_number().over(wv))
-                                  .filter(F.col(divf).isNull()
-                                          | (F.col("__rv") <= mdv))
-                                  .drop("__rv", divf))
-                    w = Window.partitionBy("segment_id").orderBy(
-                        F.desc("score"), F.asc("docid"))
-                    sample = (sample
-                              .withColumn("__r", F.row_number().over(w))
-                              .filter(F.col("__r") <= ss)
-                              .drop("__r"))
-                    sfields = sorted({sf for _, _, sf in metrics})
-                    if sfields:
-                        sdocs = self._table("docs").select(
-                            "segment_id", "docid", *sfields)
-                        sample = sample.join(
-                            sdocs, on=["segment_id", "docid"])
-                    r = sample.agg(F.count("*").alias("doc_count"),
-                                   *self._metric_exprs(metrics)).collect()[0]
-                    out[name] = {"doc_count": int(r["doc_count"]),
-                                 **self._shape_metrics(metrics, r)}
-                    return
-                if kind == "top_metrics":
-                    # ES top_metrics: the metric fields of the top
-                    # ``size`` docs under an explicit field sort — ONE
-                    # TakeOrderedAndProject over the matched frame
-                    # (never a full sort), docid tie-break pinned for
-                    # determinism
-                    mlist = body["metrics"]
-                    if isinstance(mlist, dict):
-                        mlist = [mlist]
-                    (sfield, sdir), = body["sort"].items()
-                    size = int(body.get("size", 1))
-                    desc = str(sdir).lower() == "desc"
-                    sc = F.col(sfield)
-                    rows = (matched.filter(sc.isNotNull())
-                            .orderBy(sc.desc() if desc else sc.asc(),
-                                     F.asc("segment_id"), F.asc("docid"))
-                            .limit(size).collect())
-                    out[name] = {"top": [
-                        {"sort": [r[sfield]],
-                         "metrics": {m["field"]: r[m["field"]]
-                                     for m in mlist}}
-                        for r in rows]}
-                    return
-                if kind == "t_test":
-                    # ES t_test agg: Student's t statistic between two
-                    # numeric fields — ONE aggregation of count/avg/
-                    # var_samp (paired: over the per-row difference;
-                    # unpaired: per field), driver-side arithmetic on
-                    # the 1-row result.  Pinned: rows missing either
-                    # field drop (the ES paired rule, applied to both
-                    # modes so a/b stay comparable).
-                    import math as _m
-                    ttype = str(body.get("type", "heteroscedastic"))
-                    va = F.col(body["a"]["field"]).cast("double")
-                    vb = F.col(body["b"]["field"]).cast("double")
-                    both = matched.filter(va.isNotNull() & vb.isNotNull())
-                    if ttype == "paired":
-                        d = va - vb
-                        r = both.agg(F.count(d).alias("n"),
-                                     F.avg(d).alias("m"),
-                                     F.var_samp(d).alias("v")).collect()[0]
-                        n = int(r["n"])
-                        t = (None if n < 2 or not r["v"]
-                             else float(r["m"])
-                             / _m.sqrt(float(r["v"]) / n))
-                    else:
-                        r = both.agg(
-                            F.count(va).alias("na"), F.avg(va).alias("ma"),
-                            F.var_samp(va).alias("va"),
-                            F.count(vb).alias("nb"), F.avg(vb).alias("mb"),
-                            F.var_samp(vb).alias("vb")).collect()[0]
-                        na, nb = int(r["na"]), int(r["nb"])
-                        if na < 2 or nb < 2 \
-                                or r["va"] is None or r["vb"] is None:
-                            t = None
-                        elif ttype == "homoscedastic":
-                            sp2 = (((na - 1) * float(r["va"])
-                                    + (nb - 1) * float(r["vb"]))
-                                   / (na + nb - 2))
-                            den = _m.sqrt(sp2 * (1.0 / na + 1.0 / nb))
-                            t = ((float(r["ma"]) - float(r["mb"])) / den
-                                 if den else None)
-                        else:  # heteroscedastic (Welch)
-                            den = _m.sqrt(float(r["va"]) / na
-                                          + float(r["vb"]) / nb)
-                            t = ((float(r["ma"]) - float(r["mb"])) / den
-                                 if den else None)
-                    out[name] = {"value": t}
-                    return
-                if kind == "matrix_stats":
-                    # ES matrix_stats: per-field moments + pairwise
-                    # covariance/correlation over rows holding EVERY
-                    # field (the ES listwise-deletion rule) — ONE
-                    # aggregation carrying all the moment expressions
-                    # (map-side partials; O(k²) expressions for k
-                    # fields, k is tiny).  Variance/covariance are
-                    # SAMPLE (n-1) like ES; skewness/kurtosis follow
-                    # Spark's population definitions (g1, g2 excess) —
-                    # pinned here, asserted vs numpy in pytest.
-                    mfields = body["fields"]
-                    cols = {mf: F.col(mf).cast("double")
-                            for mf in mfields}
-                    b = matched
-                    for mf in mfields:
-                        b = b.filter(cols[mf].isNotNull())
-                    exprs = [F.count("*").alias("n")]
-                    for mf in mfields:
-                        exprs += [
-                            F.avg(cols[mf]).alias(f"m__{mf}"),
-                            F.var_samp(cols[mf]).alias(f"v__{mf}"),
-                            F.skewness(cols[mf]).alias(f"s__{mf}"),
-                            F.kurtosis(cols[mf]).alias(f"k__{mf}")]
-                    for i, fa in enumerate(mfields):
-                        for fb in mfields[i + 1:]:
-                            exprs += [
-                                F.covar_samp(cols[fa], cols[fb])
-                                .alias(f"c__{fa}__{fb}"),
-                                F.corr(cols[fa], cols[fb])
-                                .alias(f"r__{fa}__{fb}")]
-                    r = b.agg(*exprs).collect()[0]
-                    n = int(r["n"])
+            def _exec_one(name: str, kind: str, body: dict) -> None:
+                out[name] = self._AGGS[kind].plan(
+                    self, name, kind, body, matched, cands)
 
-                    def _pair(pre, fa, fb, diag):
-                        if fa == fb:
-                            return diag
-                        key = (f"{pre}__{fa}__{fb}"
-                               if f"{pre}__{fa}__{fb}" in r.asDict()
-                               else f"{pre}__{fb}__{fa}")
-                        return (None if r[key] is None
-                                else float(r[key]))
-                    flds = []
-                    for mf in mfields:
-                        flds.append({
-                            "name": mf, "count": n,
-                            "mean": (None if r[f"m__{mf}"] is None
-                                     else float(r[f"m__{mf}"])),
-                            "variance": (None if r[f"v__{mf}"] is None
-                                         else float(r[f"v__{mf}"])),
-                            "skewness": (None if r[f"s__{mf}"] is None
-                                         else float(r[f"s__{mf}"])),
-                            "kurtosis": (None if r[f"k__{mf}"] is None
-                                         else float(r[f"k__{mf}"])),
-                            "covariance": {
-                                fo: _pair("c", mf, fo,
-                                          (None if r[f"v__{mf}"] is None
-                                           else float(r[f"v__{mf}"])))
-                                for fo in mfields},
-                            "correlation": {
-                                fo: _pair("r", mf, fo, 1.0)
-                                for fo in mfields}})
-                    out[name] = {"doc_count": n, "fields": flds}
-                    return
-                if kind == "adjacency_matrix":
-                    # ES adjacency_matrix: one bucket per named filter
-                    # (matched ∩ filter) plus one per PAIR
-                    # ("a&b" = matched ∩ a ∩ b).  Each filter costs one
-                    # postings scan for its candidate keys; the
-                    # intersections are key-only hash joins — never a
-                    # rescore of the main query.  Filter count is tiny
-                    # (ES caps at 100), so the pair loop is bounded.
-                    mkeys = matched.select("segment_id", "docid")
-                    fkeys = {}
-                    for fname in sorted(body["filters"]):
-                        sub = A.parse_json(body["filters"][fname],
-                                           self.schema)
-                        fkeys[fname] = (
-                            self.candidates(sub)
-                            .select("segment_id", "docid")
-                            .join(mkeys, on=["segment_id", "docid"],
-                                  how="left_semi").persist())
-                    try:
-                        buckets = []
-                        names = sorted(fkeys)
-                        for fname in names:
-                            n = int(fkeys[fname].count())
-                            if n:
-                                buckets.append({"key": fname,
-                                                "doc_count": n})
-                        for i, a in enumerate(names):
-                            for bn in names[i + 1:]:
-                                n = int(fkeys[a].join(
-                                    fkeys[bn],
-                                    on=["segment_id", "docid"],
-                                    how="left_semi").count())
-                                if n:  # ES omits empty intersections
-                                    buckets.append(
-                                        {"key": f"{a}&{bn}",
-                                         "doc_count": n})
-                        out[name] = {"buckets": buckets}
-                    finally:
-                        for df in fkeys.values():
-                            df.unpersist()
-                    return
-                col = F.col(body["field"])
-                # ES rule: docs missing the field fall out of every agg
-                # (count(col)/min/max/avg/sum skip nulls natively; the
-                # bucketed aggs must not grow a null bucket)
-                bucketed = matched.filter(col.isNotNull())
-                if kind == "terms":
-                    size = int(body.get("size", 10))
-                    metrics, th = self._sub_agg_plan(name, body)
-                    # ES order knob: _count (default) / _key / a
-                    # single-value metric sub-agg's name; all resolve
-                    # to a column of the SAME one hash aggregation, so
-                    # ordering by a metric costs nothing extra — the
-                    # ordered limit stays TakeOrderedAndProject
-                    order = body.get("order") or {"_count": "desc"}
-                    if not isinstance(order, dict) or len(order) != 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: order is {{path: asc|desc}}")
-                    (okey, odir), = order.items()
-                    desc = str(odir).lower() == "desc"
-                    if okey == "_count":
-                        ocols = [F.desc("doc_count") if desc
-                                 else F.asc("doc_count"), F.asc("key")]
-                    elif okey == "_key":
-                        ocols = [F.desc("key") if desc else F.asc("key")]
-                    else:
-                        mi = next((i for i, (sn, mk, _) in
-                                   enumerate(metrics)
-                                   if sn == okey
-                                   and mk not in ("stats",)), None)
-                        if mi is None:
-                            raise A.QueryError(
-                                f"agg {name!r}: order key {okey!r} is "
-                                f"not _count/_key/a single-value "
-                                f"metric sub-agg")
-                        oc = F.col(f"__s{mi}_value")
-                        ocols = [oc.desc_nulls_last() if desc
-                                 else oc.asc_nulls_last(), F.asc("key")]
-                    mdc = int(body.get("min_doc_count", 1))
-                    grouped = (bucketed.groupBy(col.alias("key"))
-                               .agg(F.count("*").alias("doc_count"),
-                                    *self._metric_exprs(metrics)))
-                    if mdc > 1:
-                        grouped = grouped.filter(
-                            F.col("doc_count") >= mdc)
-                    rows = grouped.orderBy(*ocols).limit(size).collect()
-                    buckets = [{"key": r["key"], "doc_count": r["doc_count"],
-                                **self._shape_metrics(metrics, r)}
-                               for r in rows]
-                    buckets = self._apply_pipes(
-                        name, buckets, self._pipe_agg_plan(name, body))
-                    if th and buckets:
-                        th_name, th_size = th
-                        per_key = self._bucket_top_hits(
-                            cands, body["field"],
-                            [b["key"] for b in buckets], th_size)
-                        for b in buckets:
-                            b[th_name] = {"hits": per_key.get(b["key"], [])}
-                    out[name] = {"buckets": buckets}
-                elif kind == "histogram":
-                    interval = float(body["interval"])
-                    if interval <= 0:
-                        raise A.QueryError(f"agg {name!r}: interval must be > 0")
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    key = (F.floor(col.cast("double") / interval)
-                           * interval).alias("key")
-                    mdc = int(body.get("min_doc_count", 1))
-                    grouped = (bucketed.groupBy(key)
-                               .agg(F.count("*").alias("doc_count"),
-                                    *self._metric_exprs(metrics)))
-                    if mdc > 1:
-                        grouped = grouped.filter(
-                            F.col("doc_count") >= mdc)
-                    rows = grouped.orderBy("key").collect()
-                    buckets = [
-                        {"key": float(r["key"]), "doc_count": r["doc_count"],
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    if mdc == 0 and len(buckets) > 1:
-                        # ES min_doc_count=0: fill interior gaps with
-                        # empty buckets (doc_count 0, metrics null) —
-                        # a driver-side pass over the REDUCED bucket
-                        # list; this is what makes derivative /
-                        # moving_fn see evenly spaced buckets
-                        filled, expect = [], buckets[0]["key"]
-                        for b in buckets:
-                            while b["key"] - expect > interval / 2:
-                                filled.append({
-                                    "key": expect, "doc_count": 0,
-                                    **{sn: ({k: None for k in
-                                             ("count", "min", "max",
-                                              "avg", "sum")}
-                                            if mk == "stats"
-                                            else {"value": None})
-                                       for sn, mk, _ in metrics}})
-                                expect += interval
-                            filled.append(b)
-                            expect = b["key"] + interval
-                        buckets = filled
-                    out[name] = {"buckets": self._apply_pipes(
-                        name, buckets, self._pipe_agg_plan(name, body))}
-                elif kind == "date_histogram":
-                    unit = self._CALENDAR_INTERVALS.get(
-                        str(body.get("calendar_interval", "day")).lower())
-                    if unit is None:
-                        raise A.QueryError(
-                            f"agg {name!r}: unsupported calendar_interval")
-                    metrics, _ = self._sub_agg_plan(name, body)
-                    key = F.date_trunc(unit, col).alias("key")
-                    rows = (bucketed.groupBy(key)
-                            .agg(F.count("*").alias("doc_count"),
-                                 *self._metric_exprs(metrics))
-                            .orderBy("key").collect())
-                    buckets = [
-                        {"key_as_string": r["key"].isoformat(),
-                         "doc_count": r["doc_count"],
-                         **self._shape_metrics(metrics, r)}
-                        for r in rows]
-                    out[name] = {"buckets": self._apply_pipes(
-                        name, buckets, self._pipe_agg_plan(name, body))}
-                elif kind == "auto_date_histogram":
-                    # ES auto_date_histogram: pick the smallest calendar
-                    # interval keeping bucket count <= ``buckets``.
-                    # ONE min/max aggregation sizes the span driver-side
-                    # against a pinned seconds-per-unit ladder (month=30d,
-                    # year=365d — an estimate is fine: it only picks the
-                    # unit; the buckets themselves come from exact
-                    # date_trunc), then the same one-hash-agg plan as
-                    # date_histogram on the chosen unit.
-                    target = int(body.get("buckets", 10))
-                    span_r = bucketed.agg(
-                        F.min(col).alias("lo"),
-                        F.max(col).alias("hi")).collect()[0]
-                    ladder = [("second", 1), ("minute", 60),
-                              ("hour", 3600), ("day", 86400),
-                              ("month", 2592000), ("year", 31536000)]
-                    unit = "year"
-                    if span_r["lo"] is not None:
-                        span = (span_r["hi"] - span_r["lo"]).total_seconds()
-                        for u, secs in ladder:
-                            if span / secs + 1 <= target:
-                                unit = u
-                                break
-                    rows = (bucketed
-                            .groupBy(F.date_trunc(unit, col).alias("key"))
-                            .agg(F.count("*").alias("doc_count"))
-                            .orderBy("key").collect())
-                    out[name] = {
-                        "interval": unit,
-                        "buckets": [
-                            {"key_as_string": r["key"].isoformat(),
-                             "doc_count": int(r["doc_count"])}
-                            for r in rows]}
-                elif kind == "stats":
-                    r = matched.agg(
-                        F.count(col).alias("count"),
-                        F.min(col).alias("min"), F.max(col).alias("max"),
-                        F.avg(col).alias("avg"), F.sum(col).alias("sum"),
-                    ).collect()[0]
-                    out[name] = {k: r[k] for k in
-                                 ("count", "min", "max", "avg", "sum")}
-                elif kind == "extended_stats":
-                    v = col.cast("double")
-                    r = matched.agg(
-                        F.count(col).alias("count"),
-                        F.min(col).alias("min"), F.max(col).alias("max"),
-                        F.avg(col).alias("avg"), F.sum(col).alias("sum"),
-                        F.sum(v * v).alias("sum_of_squares"),
-                        F.var_pop(v).alias("variance"),
-                        F.stddev_pop(v).alias("std_deviation"),
-                    ).collect()[0]
-                    out[name] = {k: r[k] for k in
-                                 ("count", "min", "max", "avg", "sum",
-                                  "sum_of_squares", "variance",
-                                  "std_deviation")}
-                elif kind == "range":
-                    # ES range agg: [from, to) buckets, overlapping
-                    # allowed — ONE pass, each bucket a conditional sum
-                    ranges = body.get("ranges") or []
-                    if not ranges:
-                        raise A.QueryError(
-                            f"agg {name!r}: range needs ranges")
-                    v = col.cast("double")
-                    exprs, keys = [], []
-                    for i, rg in enumerate(ranges):
-                        lo, hi = rg.get("from"), rg.get("to")
-                        if lo is None and hi is None:
-                            raise A.QueryError(
-                                f"agg {name!r}: a range needs from/to")
-                        c = col.isNotNull()
-                        if lo is not None:
-                            c = c & (v >= float(lo))
-                        if hi is not None:
-                            c = c & (v < float(hi))
-                        exprs.append(F.sum(F.when(c, 1).otherwise(0))
-                                     .alias(f"r{i}"))
-                        keys.append(f"{lo if lo is not None else '*'}-"
-                                    f"{hi if hi is not None else '*'}")
-                    r = matched.agg(*exprs).collect()[0]
-                    out[name] = {"buckets": [
-                        {"key": k, "from": rg.get("from"),
-                         "to": rg.get("to"), "doc_count": int(r[f"r{i}"])}
-                        for i, (k, rg) in enumerate(zip(keys, ranges))]}
-                elif kind == "percentile_ranks":
-                    vals = [float(x) for x in body.get("values") or []]
-                    if not vals:
-                        raise A.QueryError(
-                            f"agg {name!r}: percentile_ranks needs values")
-                    v = col.cast("double")
-                    exprs = [
-                        (F.lit(100.0)
-                         * F.avg(F.when(v <= x, 1.0).otherwise(0.0)))
-                        .alias(f"p{i}")
-                        for i, x in enumerate(vals)]
-                    r = matched.filter(col.isNotNull()).agg(*exprs).collect()[0]
-                    out[name] = {"values": {
-                        str(x): (None if r[f"p{i}"] is None
-                                 else float(r[f"p{i}"]))
-                        for i, x in enumerate(vals)}}
-                elif kind == "percentiles":
-                    pcts = [float(p) for p in
-                            body.get("percents", [1, 5, 25, 50, 75, 95, 99])]
-                    fracs = F.array(*[F.lit(p / 100.0) for p in pcts])
-                    fn = F.percentile_approx if body.get("approx") \
-                        else F.percentile
-                    r = matched.agg(
-                        fn(col.cast("double"), fracs).alias("v")).collect()[0]
-                    vals = r["v"] or [None] * len(pcts)
-                    out[name] = {"values": {
-                        str(p): (None if v is None else float(v))
-                        for p, v in zip(pcts, vals)}}
-                elif kind == "cardinality":
-                    expr = (F.count_distinct(col) if body.get("exact")
-                            else F.approx_count_distinct(col))
-                    out[name] = {"value": int(
-                        matched.agg(expr.alias("v")).collect()[0]["v"])}
-                elif kind in ("avg", "sum", "min", "max"):
-                    v = matched.agg(getattr(F, kind)(col)
-                                    .alias("v")).collect()[0]["v"]
-                    out[name] = {"value": v}
-                elif kind == "value_count":
-                    out[name] = {"value": int(
-                        matched.agg(F.count(col).alias("v"))
-                        .collect()[0]["v"])}
-                elif kind == "missing":
-                    # ES missing agg: matched docs WITHOUT the field —
-                    # the complement of every other agg's null rule
-                    out[name] = {"doc_count": int(
-                        matched.filter(col.isNull()).count())}
-                elif kind == "rare_terms":
-                    # ES rare_terms: the LONG TAIL — buckets whose
-                    # doc_count <= max_doc_count, ordered count-asc
-                    # then key-asc.  ES bounds memory with a cuckoo
-                    # filter; the engine's exact equivalent is the one
-                    # hash aggregation + a driver-bounded limit
-                    # (max_buckets, default 1000) so the driver never
-                    # materialises an unbounded tail at corpus scale.
-                    mdc = int(body.get("max_doc_count", 1))
-                    cap = int(body.get("max_buckets", 1000))
-                    rows = (bucketed.groupBy(col.alias("key"))
-                            .agg(F.count("*").alias("doc_count"))
-                            .filter(F.col("doc_count") <= mdc)
-                            .orderBy(F.asc("doc_count"), F.asc("key"))
-                            .limit(cap).collect())
-                    out[name] = {"buckets": [
-                        {"key": r["key"],
-                         "doc_count": int(r["doc_count"])}
-                        for r in rows]}
-                elif kind == "median_absolute_deviation":
-                    # ES MAD: median(|x - median(x)|).  Exact by
-                    # default (two percentile passes over the persisted
-                    # match frame — deterministic, oracle-matchable);
-                    # "approx": true switches both passes to
-                    # percentile_approx (one-pass sketch each, the
-                    # 100 TB default, same rationale as percentiles).
-                    fn = F.percentile_approx if body.get("approx") \
-                        else F.percentile
-                    v = col.cast("double")
-                    m = matched.agg(
-                        fn(v, F.lit(0.5)).alias("m")).collect()[0]["m"]
-                    if m is None:
-                        out[name] = {"value": None}
-                    else:
-                        r = matched.agg(
-                            fn(F.abs(v - F.lit(float(m))), F.lit(0.5))
-                            .alias("mad")).collect()[0]["mad"]
-                        out[name] = {"value": (
-                            None if r is None else float(r))}
-                elif kind == "boxplot":
-                    # ES boxplot: min / q1 / q2 / q3 / max — ONE
-                    # aggregation (exact interpolated percentiles by
-                    # default; "approx": true for the sketch path)
-                    fn = F.percentile_approx if body.get("approx") \
-                        else F.percentile
-                    v = col.cast("double")
-                    r = matched.agg(
-                        F.min(v).alias("mn"), F.max(v).alias("mx"),
-                        fn(v, F.array(F.lit(0.25), F.lit(0.5),
-                                      F.lit(0.75))).alias("q"),
-                    ).collect()[0]
-                    q = r["q"] or [None, None, None]
-                    out[name] = {
-                        "min": r["mn"], "max": r["mx"],
-                        "q1": q[0], "q2": q[1], "q3": q[2]}
-                elif kind == "string_stats":
-                    # ES string_stats: count / min_length / max_length
-                    # / avg_length in ONE aggregation; with
-                    # "show_distribution": true also the Shannon
-                    # entropy of the CHARACTER distribution — a second
-                    # aggregation over exploded characters (distributed
-                    # char-frequency count; cardinality = alphabet
-                    # size, so the reduce is trivially bounded)
-                    ln = F.length(col)
-                    r = matched.agg(
-                        F.count(col).alias("count"),
-                        F.min(ln).alias("min_length"),
-                        F.max(ln).alias("max_length"),
-                        F.avg(ln.cast("double")).alias("avg_length"),
-                    ).collect()[0]
-                    st = {k: r[k] for k in ("count", "min_length",
-                                            "max_length", "avg_length")}
-                    if body.get("show_distribution"):
-                        cf = (matched.filter(col.isNotNull())
-                              .select(F.explode(F.split(col, ""))
-                                      .alias("ch"))
-                              .filter(F.col("ch") != "")
-                              .groupBy("ch")
-                              .agg(F.count("*").alias("n")))
-                        tot = cf.agg(F.sum("n").alias("t")) \
-                            .collect()[0]["t"]
-                        ent = 0.0
-                        if tot:
-                            probs = cf.select(
-                                (F.col("n").cast("double")
-                                 / float(tot)).alias("p")).collect()
-                            ent = -sum(p["p"] * math.log2(p["p"])
-                                       for p in probs)
-                        st["entropy"] = ent
-                    out[name] = st
-                else:
-                    raise A.QueryError(f"agg {name!r}: unknown kind {kind!r}")
-
-            runnable: list[tuple[str, str, Any]] = []
-            for name, spec in aggs.items():
-                kind, body = next(iter(spec.items()))
-                if kind in self._SIBLING_KINDS:
-                    # runs over a sibling's REDUCED buckets — defer
-                    # until every parent agg has produced its output
-                    siblings.append((name, kind, body or {}))
-                    continue
-                runnable.append((name, kind, body))
+            runnable = [(name, kind, body)
+                        for name, (kind, body) in aggs.items()
+                        if not self._AGGS[kind].sibling]
             if len(runnable) > 1:
                 from concurrent.futures import ThreadPoolExecutor
 
@@ -3767,95 +2762,929 @@ class Searcher:
             else:
                 for t in runnable:
                     _exec_one(*t)
-            for name, kind, body in siblings:
-                # ES sibling pipeline aggs (max/min/avg/sum/stats
-                # _bucket): a pure reduce over the parent's final
-                # bucket list — no distributed work, like the parent
-                # pipeline aggs in _apply_pipes
-                parent, _, sub = body["buckets_path"].partition(">")
-                bl = out[parent].get("buckets") or []
-                pairs = [(b.get("key", b.get("key_as_string")),
-                          self._bpath(b, sub or "doc_count")) for b in bl]
-                vv = [v for _, v in pairs if v is not None]
-                if kind in ("max_bucket", "min_bucket"):
-                    if not vv:
-                        out[name] = {"keys": [], "value": None}
-                    else:
-                        best = max(vv) if kind == "max_bucket" else min(vv)
-                        out[name] = {"keys": [k for k, v in pairs
-                                              if v == best],
-                                     "value": best}
-                elif kind == "avg_bucket":
-                    out[name] = {"value": sum(vv) / len(vv) if vv else None}
-                elif kind == "sum_bucket":
-                    out[name] = {"value": sum(vv) if vv else None}
-                elif kind == "percentiles_bucket":
-                    # exact linear-interpolated percentiles over the
-                    # reduced bucket values (ES uses the same exact
-                    # method here — the input is already tiny)
-                    pcts = [float(p) for p in
-                            body.get("percents", [1, 5, 25, 50, 75,
-                                                  95, 99])]
-                    sv = sorted(vv)
-                    vals_out = {}
-                    for p in pcts:
-                        if not sv:
-                            vals_out[str(p)] = None
-                            continue
-                        pos = (p / 100.0) * (len(sv) - 1)
-                        lo, hi = int(math.floor(pos)), int(math.ceil(pos))
-                        vals_out[str(p)] = (
-                            sv[lo] + (sv[hi] - sv[lo]) * (pos - lo))
-                    out[name] = {"values": vals_out}
-                elif kind == "extended_stats_bucket":
-                    n = len(vv)
-                    mean = sum(vv) / n if n else None
-                    var = (sum((x - mean) ** 2 for x in vv) / n
-                           if n else None)
-                    out[name] = {
-                        "count": n,
-                        "min": min(vv) if vv else None,
-                        "max": max(vv) if vv else None,
-                        "avg": mean,
-                        "sum": sum(vv) if vv else None,
-                        "sum_of_squares": (sum(x * x for x in vv)
-                                           if vv else None),
-                        "variance": var,
-                        "std_deviation": (math.sqrt(var)
-                                          if var is not None else None)}
-                else:  # stats_bucket
-                    out[name] = {
-                        "count": len(vv),
-                        "min": min(vv) if vv else None,
-                        "max": max(vv) if vv else None,
-                        "avg": sum(vv) / len(vv) if vv else None,
-                        "sum": sum(vv) if vv else None}
+            for name, (kind, body) in aggs.items():
+                if self._AGGS[kind].sibling:
+                    # a sibling pipeline agg reduces another agg's final
+                    # bucket list ("parent>path"), so it runs after
+                    # every parent — driver-side, no distributed work
+                    parent, _, sub = body["buckets_path"].partition(">")
+                    pairs = [(b.get("key", b.get("key_as_string")),
+                              self._bpath(b, sub or "doc_count"))
+                             for b in out[parent].get("buckets") or []]
+                    out[name] = self._AGGS[kind].plan(
+                        self, kind, body,
+                        [v for _, v in pairs if v is not None], pairs)
             return out
         finally:
             matched.unpersist()
+
+    def check_aggs(self, aggs: dict) -> tuple[dict, set[str]]:
+        """Validate an ES ``aggs`` request with NO Spark work: every
+        agg's ``_AGGS`` check runs here, so a bad request fails before
+        the caller plans its candidates.  Returns the request as
+        ``{name: (kind, body)}`` — the ES sibling shape
+        ``{kind: {..}, "aggs": {..}}`` folded into the body — and the
+        stored fields the doc-store join must carry."""
+        if not isinstance(aggs, dict):
+            raise A.QueryError("aggs must be a dict of named aggs")
+        norm: dict[str, tuple[str, dict]] = {}
+        for name, spec in aggs.items():
+            sub = None
+            if isinstance(spec, dict) and len(spec) == 2 and "aggs" in spec:
+                sub = spec["aggs"]
+                spec = {k: v for k, v in spec.items() if k != "aggs"}
+            if not isinstance(spec, dict) or len(spec) != 1:
+                raise A.QueryError(f"agg {name!r}: expected one agg kind")
+            (kind, body), = spec.items()
+            body = {} if body is None else body
+            if not isinstance(body, dict):
+                raise A.QueryError(f"agg {name!r}: expected a dict body")
+            if sub is not None:
+                body = {**body, "aggs": sub}
+            if kind not in self._AGGS:
+                raise A.QueryError(
+                    f"agg {name!r}: unknown kind {kind!r} (supported: "
+                    f"{', '.join(sorted(self._AGGS))})")
+            if "aggs" in body and kind not in _BUCKET_PARENTS:
+                raise A.QueryError(
+                    f"agg {name!r}: sub-aggs are only supported under "
+                    f"bucket aggs ({'/'.join(_BUCKET_PARENTS)})")
+            norm[name] = (kind, body)
+        fields: set[str] = set()
+        for name, (kind, body) in norm.items():
+            fields |= self._AGGS[kind].check(self, name, kind, body, norm)
+        return norm, fields
+
+    # ------------------------------------------------ shared agg checks
+    def _stored(self, ctx: str, kind: str, f, types: tuple = ()) -> str:
+        """The field check every doc-store agg shares: ``f`` names a
+        stored field, of one of ``types`` when given — the ES typing
+        rules (numeric metrics and histograms need numbers, date
+        histograms a date) fail here instead of as an executor-side
+        ANSI cast error.  Returns ``f``."""
+        fdef = self.schema.field(f) if isinstance(f, str) else None
+        if fdef is None or not fdef.stored:
+            raise A.QueryError(
+                f"{ctx}: {kind} needs a stored field, {f!r} is not one")
+        if types and fdef.type not in types:
+            raise A.QueryError(
+                f"{ctx}: {kind} needs a "
+                f"{'numeric' if types == _NUMERIC else types[0]} field, "
+                f"{f!r} is {fdef.type}")
+        return f
+
+    def _check_subs(self, name: str, kind: str, body: dict) -> set[str]:
+        """The ONE sub-agg rule set of every bucket parent: metric
+        sub-aggs read stored fields (numeric for avg/sum/min/max/stats),
+        top_hits rides only a terms agg, pipeline sub-aggs only a parent
+        in ``_PIPE_PARENTS``.  Returns the metric sub-aggs' fields."""
+        metrics, th, pipes = self._sub_agg_plan(name, body)
+        if th is not None and kind != "terms":
+            raise A.QueryError(
+                f"agg {name!r}: a top_hits sub-agg is only supported "
+                f"under a terms agg")
+        if pipes and kind not in _PIPE_PARENTS:
+            raise A.QueryError(
+                f"agg {name!r}: pipeline sub-aggs need a "
+                f"{'/'.join(_PIPE_PARENTS)} parent")
+        return {self._stored(
+            f"agg {name!r}: sub-agg {sn!r}", sk, sf,
+            _NUMERIC if sk in ("avg", "sum", "min", "max", "stats") else ())
+            for sn, sk, sf in metrics}
+
+    def _check_field(self, name, kind, body, aggs) -> set[str]:
+        """A kind keyed on one stored ``body["field"]``: its entry's
+        field ``types`` and body ``rule``, plus a bucket parent's
+        sub-aggs."""
+        spec = self._AGGS[kind]
+        fields = {self._stored(f"agg {name!r}", kind, body.get("field"),
+                               spec.types)}
+        if spec.rule is not None:
+            spec.rule(name, body)
+        if kind in _BUCKET_PARENTS:
+            fields |= self._check_subs(name, kind, body)
+        return fields
+
+    @staticmethod
+    def _interval(name: str, body: dict) -> float:
+        interval = float(body.get("interval", 0))
+        if not interval > 0:
+            raise A.QueryError(f"agg {name!r}: interval must be > 0")
+        return interval
+
+    @staticmethod
+    def _calendar_unit(name: str, body: dict) -> str:
+        unit = _CALENDAR_INTERVALS.get(
+            str(body.get("calendar_interval", "day")).lower())
+        if unit is None:
+            raise A.QueryError(
+                f"agg {name!r}: unsupported calendar_interval")
+        return unit
+
+    @staticmethod
+    def _check_buckets(name: str, body: dict) -> None:
+        if int(body.get("buckets", 10)) < 1:
+            raise A.QueryError(f"agg {name!r}: buckets must be >= 1")
+
+    @staticmethod
+    def _check_ranges(name: str, body: dict) -> None:
+        ranges = body.get("ranges")
+        if not isinstance(ranges, list) or not ranges:
+            raise A.QueryError(f"agg {name!r}: range needs ranges")
+        for rg in ranges:
+            if not isinstance(rg, dict) \
+                    or (rg.get("from") is None and rg.get("to") is None):
+                raise A.QueryError(f"agg {name!r}: a range needs from/to")
+
+    @staticmethod
+    def _check_values(name: str, body: dict) -> None:
+        if not [float(x) for x in body.get("values") or []]:
+            raise A.QueryError(
+                f"agg {name!r}: percentile_ranks needs values")
+
+    @staticmethod
+    def _terms_order(name: str, body: dict) -> list:
+        """ES terms order knob: _count (default) / _key / a single-value
+        metric sub-agg's name — all resolve to a column of the SAME one
+        hash aggregation, so ordering by a metric costs nothing extra
+        (the ordered limit stays TakeOrderedAndProject)."""
+        metrics = Searcher._sub_agg_plan(name, body)[0]
+        order = body.get("order") or {"_count": "desc"}
+        if not isinstance(order, dict) or len(order) != 1:
+            raise A.QueryError(f"agg {name!r}: order is {{path: asc|desc}}")
+        (okey, odir), = order.items()
+        desc = str(odir).lower() == "desc"
+        if okey == "_count":
+            return [F.desc("doc_count") if desc else F.asc("doc_count"),
+                    F.asc("key")]
+        if okey == "_key":
+            return [F.desc("key") if desc else F.asc("key")]
+        mi = next((i for i, (sn, mk, _) in enumerate(metrics)
+                   if sn == okey and mk != "stats"), None)
+        if mi is None:
+            raise A.QueryError(
+                f"agg {name!r}: order key {okey!r} is not _count/_key/a "
+                f"single-value metric sub-agg")
+        oc = F.col(f"__s{mi}_value")
+        return [oc.desc_nulls_last() if desc else oc.asc_nulls_last(),
+                F.asc("key")]
+
+    def _check_composite(self, name, kind, body, aggs) -> set[str]:
+        sources = body.get("sources")
+        if not isinstance(sources, list) or not sources:
+            raise A.QueryError(
+                f"agg {name!r}: composite needs a sources list")
+        fields = set()
+        for s in sources:
+            if not isinstance(s, dict) or len(s) != 1:
+                raise A.QueryError(
+                    f"agg {name!r}: each composite source is "
+                    f"{{name: {{'terms': {{'field': ..}}}}}}")
+            (sname, sspec), = s.items()
+            fields.add(self._stored(  # only terms sources are supported
+                f"agg {name!r}: composite source {sname!r}", "a terms source",
+                (sspec.get("terms") or {}).get("field")
+                if isinstance(sspec, dict) else None))
+        after = body.get("after")
+        if after and (not isinstance(after, dict)
+                      or set(after) != {next(iter(s)) for s in sources}):
+            raise A.QueryError(
+                f"agg {name!r}: after key must name every source")
+        return fields | self._check_subs(name, kind, body)
+
+    def _check_multi_terms(self, name, kind, body, aggs) -> set[str]:
+        tlist = body.get("terms")
+        if not isinstance(tlist, list) or len(tlist) < 2:
+            raise A.QueryError(
+                f"agg {name!r}: multi_terms needs a list of >= 2 "
+                f"{{'field': ..}} terms")
+        return {self._stored(f"agg {name!r}", kind, t.get("field")
+                             if isinstance(t, dict) else None)
+                for t in tlist} | self._check_subs(name, kind, body)
+
+    def _check_global(self, name, kind, body, aggs) -> set[str]:
+        self._check_subs(name, kind, body)
+        return set()  # joins its own all-docs frame, not ``matched``
+
+    def _check_sampler(self, name, kind, body, aggs) -> set[str]:
+        if int(body.get("shard_size", 100)) <= 0:
+            raise A.QueryError(
+                f"agg {name!r}: sampler shard_size must be > 0")
+        if kind == "diversified_sampler":
+            self._stored(f"agg {name!r}", kind, body.get("field"))
+            if int(body.get("max_docs_per_value", 1)) < 1:
+                raise A.QueryError(
+                    f"agg {name!r}: max_docs_per_value must be >= 1")
+        self._check_subs(name, kind, body)
+        return set()  # fields join off the SAMPLE frame, not ``matched``
+
+    def _check_filters(self, name, kind, body, aggs) -> set[str]:
+        flt = body.get("filters")
+        if not isinstance(flt, dict) or not flt:
+            raise A.QueryError(
+                f"agg {name!r}: {kind} needs a dict of named filter "
+                f"queries")
+        for fname, q in flt.items():
+            if kind == "adjacency_matrix" and "&" in fname:
+                raise A.QueryError(
+                    f"agg {name!r}: filter name {fname!r} may not contain "
+                    f"'&' (the intersection separator)")
+            A.parse_json(q, self.schema)  # fail at parse time
+        return set()
+
+    def _check_top_metrics(self, name, kind, body, aggs) -> set[str]:
+        mlist = body.get("metrics")
+        if isinstance(mlist, dict):
+            mlist = [mlist]
+        srt = body.get("sort")
+        if not isinstance(mlist, list) or not mlist \
+                or not isinstance(srt, dict) or len(srt) != 1:
+            raise A.QueryError(
+                f"agg {name!r}: top_metrics needs metrics "
+                f"[{{'field': ..}}] and sort {{field: asc|desc}}")
+        (sfield, sdir), = srt.items()
+        if str(sdir).lower() not in ("asc", "desc"):
+            raise A.QueryError(
+                f"agg {name!r}: sort direction must be asc|desc")
+        return {self._stored(f"agg {name!r}", kind, f)
+                for f in [m.get("field") for m in mlist] + [sfield]}
+
+    def _numeric_parts(self, name, kind, body, parts) -> set[str]:
+        """t_test / weighted_avg: each ``{part: {"field": ..}}`` block
+        names a stored numeric field."""
+        return {self._stored(f"agg {name!r}", kind,
+                             (body.get(p) or {}).get("field"), _NUMERIC)
+                for p in parts}
+
+    def _check_t_test(self, name, kind, body, aggs) -> set[str]:
+        if str(body.get("type", "heteroscedastic")) \
+                not in ("paired", "homoscedastic", "heteroscedastic"):
+            raise A.QueryError(
+                f"agg {name!r}: t_test type must be "
+                f"paired/homoscedastic/heteroscedastic")
+        return self._numeric_parts(name, kind, body, ("a", "b"))
+
+    def _check_matrix_stats(self, name, kind, body, aggs) -> set[str]:
+        mfields = body.get("fields")
+        if not isinstance(mfields, list) or len(mfields) < 2:
+            raise A.QueryError(f"agg {name!r}: matrix_stats needs >= 2 fields")
+        return {self._stored(f"agg {name!r}", kind, mf, _NUMERIC)
+                for mf in mfields}
+
+    def _check_significant(self, name, kind, body, aggs) -> set[str]:
+        # significant_terms runs off the POSTINGS (term space);
+        # significant_text re-ANALYZES the stored text of matched docs,
+        # so its field must be stored AND carry a tokenizer (the
+        # background stays the termdict, so indexed too — ES supports
+        # un-indexed text, this engine's background statistics come
+        # from its own postings).  Neither reads the joined doc store.
+        f = body.get("field")
+        fdef = self.schema.field(f) if isinstance(f, str) else None
+        text = kind == "significant_text"
+        if fdef is None or not fdef.indexed or (
+                text and (not fdef.stored or fdef.tokenizer is None)):
+            raise A.QueryError(
+                f"agg {name!r}: {kind} needs an "
+                f"{'stored indexed text' if text else 'indexed'} field, "
+                f"{f!r} is not one")
+        return set()
+
+    def _check_sibling(self, name, kind, body, aggs) -> set[str]:
+        path = str(body.get("buckets_path", ""))
+        parent = path.split(">", 1)[0]
+        if ">" not in path or parent not in aggs:
+            raise A.QueryError(
+                f"agg {name!r}: {kind} needs buckets_path "
+                f"'<sibling bucket agg>>metric'")
+        if aggs[parent][0] not in _PIPE_PARENTS + ("composite",):
+            raise A.QueryError(
+                f"agg {name!r}: buckets_path parent {parent!r} is not a "
+                f"bucket agg")
+        return set()
+
+    # ------------------------------------------------- shared agg plans
+    def _bucket_rows(self, matched: DataFrame, fields: list[str],
+                     keys: list, metrics: list, order: list, key,
+                     limit: int | None = None,
+                     having: Column | None = None) -> list[dict]:
+        """The bucket plan every grouping agg shares: docs missing any
+        key field fall out (the ES rule — no null bucket), then ONE
+        ``groupBy(keys).agg(count, *metric sub-aggs)`` with map-side
+        partials, an optional filter on the aggregated rows, and an
+        ordered (limited) collect.  Each row becomes ``key(row)`` +
+        doc_count + its metric sub-aggs."""
+        for f in fields:
+            matched = matched.filter(F.col(f).isNotNull())
+        g = matched.groupBy(*keys).agg(F.count("*").alias("doc_count"),
+                                       *self._metric_exprs(metrics))
+        if having is not None:
+            g = g.filter(having)
+        g = g.orderBy(*order)
+        return [{**key(r), "doc_count": int(r["doc_count"]),
+                 **self._shape_metrics(metrics, r)}
+                for r in (g if limit is None else g.limit(limit)).collect()]
+
+    def _single_bucket(self, keys: DataFrame, metrics: list) -> dict:
+        """A one-bucket agg (global / sampler): the doc-store join for
+        the metric sub-aggs' fields only, then count + metrics in ONE
+        aggregation."""
+        mfields = sorted({f for _, _, f in metrics})
+        if mfields:
+            keys = keys.join(self._table("docs").select(
+                "segment_id", "docid", *mfields), on=["segment_id", "docid"])
+        r = keys.agg(F.count("*").alias("doc_count"),
+                     *self._metric_exprs(metrics)).collect()[0]
+        return {"doc_count": int(r["doc_count"]),
+                **self._shape_metrics(metrics, r)}
+
+    def _plan_metric(self, name, kind, body, matched, cands) -> dict:
+        """A single-row metric kind: its entry's ``exprs`` in ONE
+        aggregation over the matched frame, shaped driver-side."""
+        spec = self._AGGS[kind]
+        col = F.col(body["field"])
+        if spec.nonnull:
+            matched = matched.filter(col.isNotNull())
+        row = matched.agg(*spec.exprs(col, body)).collect()[0]
+        return spec.shape(row, body)
+
+    # ------------------------------------------------ per-kind agg plans
+    def _plan_terms(self, name, kind, body, matched, cands) -> dict:
+        metrics, th, pipes = self._sub_agg_plan(name, body)
+        mdc = int(body.get("min_doc_count", 1))
+        buckets = self._bucket_rows(
+            matched, [body["field"]], [F.col(body["field"]).alias("key")],
+            metrics, self._terms_order(name, body),
+            lambda r: {"key": r["key"]}, limit=int(body.get("size", 10)),
+            having=F.col("doc_count") >= mdc if mdc > 1 else None)
+        buckets = self._apply_pipes(name, buckets, pipes)
+        if th and buckets:
+            th_name, th_size = th
+            per_key = self._bucket_top_hits(
+                cands, body["field"], [b["key"] for b in buckets], th_size)
+            for b in buckets:
+                b[th_name] = {"hits": per_key.get(b["key"], [])}
+        return {"buckets": buckets}
+
+    def _plan_histogram(self, name, kind, body, matched, cands) -> dict:
+        interval = self._interval(name, body)
+        metrics, _, pipes = self._sub_agg_plan(name, body)
+        mdc = int(body.get("min_doc_count", 1))
+        key = (F.floor(F.col(body["field"]).cast("double") / interval)
+               * interval).alias("key")
+        buckets = self._bucket_rows(
+            matched, [body["field"]], [key], metrics, ["key"],
+            lambda r: {"key": float(r["key"])},
+            having=F.col("doc_count") >= mdc if mdc > 1 else None)
+        if mdc == 0 and len(buckets) > 1:
+            # ES min_doc_count=0: fill interior gaps with empty buckets
+            # (doc_count 0, metrics null) — a driver-side pass over the
+            # REDUCED bucket list; this is what makes derivative /
+            # moving_fn see evenly spaced buckets
+            filled, expect = [], buckets[0]["key"]
+            for b in buckets:
+                while b["key"] - expect > interval / 2:
+                    filled.append({
+                        "key": expect, "doc_count": 0,
+                        **{sn: (dict.fromkeys(_STATS) if mk == "stats"
+                                else {"value": None})
+                           for sn, mk, _ in metrics}})
+                    expect += interval
+                filled.append(b)
+                expect = b["key"] + interval
+            buckets = filled
+        return {"buckets": self._apply_pipes(name, buckets, pipes)}
+
+    def _plan_date_histogram(self, name, kind, body, matched, cands) -> dict:
+        metrics, _, pipes = self._sub_agg_plan(name, body)
+        key = F.date_trunc(self._calendar_unit(name, body),
+                           F.col(body["field"])).alias("key")
+        buckets = self._bucket_rows(
+            matched, [body["field"]], [key], metrics, ["key"],
+            lambda r: {"key_as_string": r["key"].isoformat()})
+        return {"buckets": self._apply_pipes(name, buckets, pipes)}
+
+    def _plan_auto_date_histogram(self, name, kind, body, matched,
+                                  cands) -> dict:
+        # ES auto_date_histogram: the smallest calendar unit keeping
+        # bucket count <= ``buckets``.  ONE min/max aggregation sizes the
+        # span driver-side against _AUTO_UNITS, then the date_histogram
+        # bucket plan runs on the chosen unit (exact date_trunc buckets).
+        col = F.col(body["field"])
+        target = int(body.get("buckets", 10))
+        span_r = matched.filter(col.isNotNull()).agg(
+            F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
+        unit = "year"
+        if span_r["lo"] is not None:
+            span = (span_r["hi"] - span_r["lo"]).total_seconds()
+            unit = next((u for u, secs in _AUTO_UNITS
+                         if span / secs + 1 <= target), "year")
+        return {"interval": unit, "buckets": self._bucket_rows(
+            matched, [body["field"]], [F.date_trunc(unit, col).alias("key")],
+            [], ["key"], lambda r: {"key_as_string": r["key"].isoformat()})}
+
+    def _plan_rare_terms(self, name, kind, body, matched, cands) -> dict:
+        # ES rare_terms: the LONG TAIL — buckets whose doc_count <=
+        # max_doc_count, ordered count-asc then key-asc.  ES bounds
+        # memory with a cuckoo filter; the engine's exact equivalent is
+        # the one hash aggregation + a driver-bounded limit (max_buckets,
+        # default 1000) so the driver never materialises an unbounded
+        # tail at corpus scale.
+        return {"buckets": self._bucket_rows(
+            matched, [body["field"]], [F.col(body["field"]).alias("key")],
+            [], [F.asc("doc_count"), F.asc("key")],
+            lambda r: {"key": r["key"]},
+            limit=int(body.get("max_buckets", 1000)),
+            having=F.col("doc_count") <= int(body.get("max_doc_count", 1)))}
+
+    def _plan_composite(self, name, kind, body, matched, cands) -> dict:
+        # ES composite agg: deterministic multi-source key paging.  ONE
+        # hash aggregation on the source tuple (map-side partials), then
+        # the after-key predicate prunes BEFORE the ordered limit — page
+        # N costs one agg + top-size under the key's total order, never
+        # a depth-(N·size) re-rank, which is what pages a 100 TB match
+        # set to exhaustion.  ES: a doc missing any source falls out.
+        snames = [next(iter(s)) for s in body["sources"]]
+        sfields = [next(iter(s.values()))["terms"]["field"]
+                   for s in body["sources"]]
+        size = int(body.get("size", 10))
+        after = body.get("after")
+        pred = eq = None
+        if after:
+            for sn in snames:  # strict lexicographic >
+                gt = F.col(sn) > F.lit(after[sn])
+                step = gt if eq is None else eq & gt
+                pred = step if pred is None else pred | step
+                e = F.col(sn) == F.lit(after[sn])
+                eq = e if eq is None else eq & e
+        metrics = self._sub_agg_plan(name, body)[0]
+        buckets = self._bucket_rows(
+            matched, sfields,
+            [F.col(sf).alias(sn) for sn, sf in zip(snames, sfields)],
+            metrics, [F.asc(sn) for sn in snames],
+            lambda r: {"key": {sn: r[sn] for sn in snames}},
+            limit=size, having=pred)
+        out = {"buckets": buckets}
+        if len(buckets) == size:
+            out["after_key"] = dict(buckets[-1]["key"])
+        return out
+
+    def _plan_multi_terms(self, name, kind, body, matched, cands) -> dict:
+        # ES multi_terms: buckets keyed by a TUPLE of field values — the
+        # same ONE hash aggregation as terms (groupBy on the tuple);
+        # a doc missing ANY key field falls out (ES rule)
+        tfields = [t["field"] for t in body["terms"]]
+        ks = [f"__k{i}" for i in range(len(tfields))]
+        metrics = self._sub_agg_plan(name, body)[0]
+        return {"buckets": self._bucket_rows(
+            matched, tfields,
+            [F.col(tf).alias(k) for tf, k in zip(tfields, ks)], metrics,
+            [F.desc("doc_count"), *[F.asc(k) for k in ks]],
+            lambda r: {"key": [r[k] for k in ks],
+                       "key_as_string": "|".join(str(r[k]) for k in ks)},
+            limit=int(body.get("size", 10)))}
+
+    def _plan_global(self, name, kind, body, matched, cands) -> dict:
+        # whole-index bucket (tombstone-filtered like every other
+        # surface): count + metric sub-aggs in ONE aggregation over the
+        # all-docs candidate keys, ignoring the query
+        return self._single_bucket(
+            self.candidates(A.AllQ()).select("segment_id", "docid"),
+            self._sub_agg_plan(name, body)[0])
+
+    def _plan_sampler(self, name, kind, body, matched, cands) -> dict:
+        # ES sampler agg: sub-aggs over the best-scoring shard_size docs
+        # PER SHARD.  The engine's shard is the segment: ONE window over
+        # the scored candidate set (rank by score desc, docid asc within
+        # each segment — deterministic where ES is shard-layout-
+        # dependent), then the doc-store join and one aggregation over
+        # the sample only.  The window is hash-partitioned by segment_id
+        # and top-k bounded, so no executor ever sorts more than one
+        # segment's matches.
+        # diversified_sampler: same plan with ONE extra window ranked
+        # per (segment, dedup-field value) — keep max_docs_per_value
+        # best per value BEFORE the shard_size cut (the ES
+        # de-duplication order); the dedup field joins in ahead of the
+        # windows, null values are exempt from the cap (the ES rule:
+        # docs missing the field are not de-duplicated).
+        from pyspark.sql import Window
+        sample = cands.select("segment_id", "docid", "score")
+        if kind == "diversified_sampler":
+            divf = body["field"]
+            mdv = int(body.get("max_docs_per_value", 1))
+            sample = sample.join(self._table("docs").select(
+                "segment_id", "docid", divf),
+                on=["segment_id", "docid"], how="left")
+            wv = Window.partitionBy("segment_id", divf).orderBy(
+                F.desc("score"), F.asc("docid"))
+            sample = (sample.withColumn("__rv", F.row_number().over(wv))
+                      .filter(F.col(divf).isNull() | (F.col("__rv") <= mdv))
+                      .drop("__rv", divf))
+        w = Window.partitionBy("segment_id").orderBy(
+            F.desc("score"), F.asc("docid"))
+        sample = (sample.withColumn("__r", F.row_number().over(w))
+                  .filter(F.col("__r") <= int(body.get("shard_size", 100)))
+                  .drop("__r"))
+        return self._single_bucket(sample, self._sub_agg_plan(name, body)[0])
+
+    def _plan_filters(self, name, kind, body, matched, cands) -> dict:
+        # ES filters agg: one named bucket per sub-query, each counting
+        # matched docs ALSO matching the filter — a left-semi join of the
+        # (persisted) match keys against the filter's candidate keys, so
+        # each filter costs one postings scan, never a rescore of the
+        # main query
+        mkeys = matched.select("segment_id", "docid")
+        buckets = {}
+        for fname, q in body["filters"].items():
+            skeys = (self.candidates(A.parse_json(q, self.schema))
+                     .select("segment_id", "docid"))
+            buckets[fname] = {"doc_count": int(mkeys.join(
+                skeys, on=["segment_id", "docid"], how="left_semi").count())}
+        return {"buckets": buckets}
+
+    def _plan_adjacency_matrix(self, name, kind, body, matched,
+                               cands) -> dict:
+        # ES adjacency_matrix: one bucket per named filter (matched ∩
+        # filter) plus one per PAIR ("a&b" = matched ∩ a ∩ b).  Each
+        # filter costs one postings scan for its candidate keys; the
+        # intersections are key-only hash joins — never a rescore of the
+        # main query.  Filter count is tiny (ES caps at 100), so the pair
+        # loop is bounded.  ES omits empty buckets.
+        mkeys = matched.select("segment_id", "docid")
+        fkeys = {fname: self.candidates(
+            A.parse_json(body["filters"][fname], self.schema))
+            .select("segment_id", "docid")
+            .join(mkeys, on=["segment_id", "docid"], how="left_semi")
+            .persist() for fname in sorted(body["filters"])}
+        try:
+            names = sorted(fkeys)
+            counts = [(fname, fkeys[fname].count()) for fname in names]
+            counts += [(f"{a}&{b}", fkeys[a].join(
+                fkeys[b], on=["segment_id", "docid"],
+                how="left_semi").count())
+                for i, a in enumerate(names) for b in names[i + 1:]]
+            return {"buckets": [{"key": k, "doc_count": int(n)}
+                                for k, n in counts if n]}
+        finally:
+            for df in fkeys.values():
+                df.unpersist()
+
+    def _plan_top_metrics(self, name, kind, body, matched, cands) -> dict:
+        # ES top_metrics: the metric fields of the top ``size`` docs
+        # under an explicit field sort — ONE TakeOrderedAndProject over
+        # the matched frame (never a full sort), docid tie-break pinned
+        # for determinism
+        mlist = body["metrics"]
+        mlist = [mlist] if isinstance(mlist, dict) else mlist
+        (sfield, sdir), = body["sort"].items()
+        sc = F.col(sfield)
+        rows = (matched.filter(sc.isNotNull())
+                .orderBy(sc.desc() if str(sdir).lower() == "desc"
+                         else sc.asc(), F.asc("segment_id"), F.asc("docid"))
+                .limit(int(body.get("size", 1))).collect())
+        return {"top": [{"sort": [r[sfield]],
+                         "metrics": {m["field"]: r[m["field"]]
+                                     for m in mlist}} for r in rows]}
+
+    def _plan_weighted_avg(self, name, kind, body, matched, cands) -> dict:
+        # ES weighted_avg: sum(v*w)/sum(w) over rows where BOTH are
+        # present — one aggregation, map-side partials; a null value
+        # with a present weight drops (value_missing unsupported, the ES
+        # default)
+        vf = F.col(body["value"]["field"]).cast("double")
+        wf = F.col(body["weight"]["field"]).cast("double")
+        r = matched.filter(vf.isNotNull() & wf.isNotNull()).agg(
+            F.sum(vf * wf).alias("vw"), F.sum(wf).alias("w")).collect()[0]
+        return {"value": None if not r["w"]
+                else float(r["vw"]) / float(r["w"])}
+
+    def _plan_t_test(self, name, kind, body, matched, cands) -> dict:
+        # ES t_test agg: Student's t statistic between two numeric fields
+        # — ONE aggregation of count/avg/var_samp (paired: over the
+        # per-row difference; unpaired: per field), driver-side
+        # arithmetic on the 1-row result.  Pinned: rows missing either
+        # field drop (the ES paired rule, applied to both modes so a/b
+        # stay comparable).
+        ttype = str(body.get("type", "heteroscedastic"))
+        va = F.col(body["a"]["field"]).cast("double")
+        vb = F.col(body["b"]["field"]).cast("double")
+        both = matched.filter(va.isNotNull() & vb.isNotNull())
+        if ttype == "paired":
+            d = va - vb
+            r = both.agg(F.count(d).alias("n"), F.avg(d).alias("m"),
+                         F.var_samp(d).alias("v")).collect()[0]
+            n = int(r["n"])
+            return {"value": None if n < 2 or not r["v"]
+                    else float(r["m"]) / math.sqrt(float(r["v"]) / n)}
+        r = both.agg(
+            F.count(va).alias("na"), F.avg(va).alias("ma"),
+            F.var_samp(va).alias("va"),
+            F.count(vb).alias("nb"), F.avg(vb).alias("mb"),
+            F.var_samp(vb).alias("vb")).collect()[0]
+        na, nb = int(r["na"]), int(r["nb"])
+        if na < 2 or nb < 2 or r["va"] is None or r["vb"] is None:
+            return {"value": None}
+        if ttype == "homoscedastic":
+            sp2 = (((na - 1) * float(r["va"]) + (nb - 1) * float(r["vb"]))
+                   / (na + nb - 2))
+            den = math.sqrt(sp2 * (1.0 / na + 1.0 / nb))
+        else:  # heteroscedastic (Welch)
+            den = math.sqrt(float(r["va"]) / na + float(r["vb"]) / nb)
+        return {"value": (float(r["ma"]) - float(r["mb"])) / den
+                if den else None}
+
+    def _plan_matrix_stats(self, name, kind, body, matched, cands) -> dict:
+        # ES matrix_stats: per-field moments + pairwise covariance /
+        # correlation over rows holding EVERY field (the ES
+        # listwise-deletion rule) — ONE aggregation carrying all the
+        # moment expressions (map-side partials; O(k²) expressions for k
+        # fields, k is tiny).  Variance/covariance are SAMPLE (n-1) like
+        # ES; skewness/kurtosis follow Spark's population definitions
+        # (g1, g2 excess) — pinned here, asserted vs numpy in pytest.
+        mfields = body["fields"]
+        cols = {mf: F.col(mf).cast("double") for mf in mfields}
+        b = matched
+        for mf in mfields:
+            b = b.filter(cols[mf].isNotNull())
+        exprs = [F.count("*").alias("n")]
+        for mf in mfields:
+            exprs += [F.avg(cols[mf]).alias(f"m__{mf}"),
+                      F.var_samp(cols[mf]).alias(f"v__{mf}"),
+                      F.skewness(cols[mf]).alias(f"s__{mf}"),
+                      F.kurtosis(cols[mf]).alias(f"k__{mf}")]
+        for i, fa in enumerate(mfields):
+            for fb in mfields[i + 1:]:
+                exprs += [F.covar_samp(cols[fa], cols[fb])
+                          .alias(f"c__{fa}__{fb}"),
+                          F.corr(cols[fa], cols[fb]).alias(f"r__{fa}__{fb}")]
+        r = b.agg(*exprs).collect()[0].asDict()
+
+        def pair(pre: str, fa: str, fb: str, diag):
+            if fa == fb:
+                return diag
+            return _opt_float(r.get(f"{pre}__{fa}__{fb}",
+                                    r.get(f"{pre}__{fb}__{fa}")))
+        return {"doc_count": int(r["n"]), "fields": [{
+            "name": mf, "count": int(r["n"]),
+            "mean": _opt_float(r[f"m__{mf}"]),
+            "variance": _opt_float(r[f"v__{mf}"]),
+            "skewness": _opt_float(r[f"s__{mf}"]),
+            "kurtosis": _opt_float(r[f"k__{mf}"]),
+            "covariance": {fo: pair("c", mf, fo, _opt_float(r[f"v__{mf}"]))
+                           for fo in mfields},
+            "correlation": {fo: pair("r", mf, fo, 1.0) for fo in mfields}}
+            for mf in mfields]}
+
+    def _plan_mad(self, name, kind, body, matched, cands) -> dict:
+        # ES MAD: median(|x - median(x)|) — two percentile passes over
+        # the persisted match frame (exact by default; "approx": true
+        # switches both to the one-pass sketch, as for percentiles)
+        fn = _pctl_fn(body)
+        v = F.col(body["field"]).cast("double")
+        m = matched.agg(fn(v, F.lit(0.5)).alias("m")).collect()[0]["m"]
+        if m is None:
+            return {"value": None}
+        return {"value": _opt_float(matched.agg(
+            fn(F.abs(v - F.lit(float(m))), F.lit(0.5)).alias("mad"))
+            .collect()[0]["mad"])}
+
+    def _plan_string_stats(self, name, kind, body, matched, cands) -> dict:
+        # ES string_stats: count / min / max / avg length in ONE
+        # aggregation; "show_distribution": true adds the Shannon entropy
+        # of the CHARACTER distribution — a second aggregation over
+        # exploded characters (distributed char-frequency count;
+        # cardinality = alphabet size, so the reduce is trivially bounded)
+        st = self._plan_metric(name, kind, body, matched, cands)
+        if body.get("show_distribution"):
+            col = F.col(body["field"])
+            cf = (matched.filter(col.isNotNull())
+                  .select(F.explode(F.split(col, "")).alias("ch"))
+                  .filter(F.col("ch") != "")
+                  .groupBy("ch").agg(F.count("*").alias("n")))
+            tot = cf.agg(F.sum("n").alias("t")).collect()[0]["t"]
+            st["entropy"] = -sum(
+                p["p"] * math.log2(p["p"]) for p in cf.select(
+                    (F.col("n").cast("double") / float(tot)).alias("p"))
+                .collect()) if tot else 0.0
+        return st
+
+    @staticmethod
+    def _range_exprs(col: Column, body: dict) -> list:
+        # ES range agg: [from, to) buckets, overlapping allowed — ONE
+        # pass, each bucket a conditional sum
+        v, exprs = col.cast("double"), []
+        for i, rg in enumerate(body["ranges"]):
+            c = col.isNotNull()
+            if rg.get("from") is not None:
+                c = c & (v >= float(rg["from"]))
+            if rg.get("to") is not None:
+                c = c & (v < float(rg["to"]))
+            exprs.append(F.sum(F.when(c, 1).otherwise(0)).alias(f"r{i}"))
+        return exprs
+
+    @staticmethod
+    def _range_shape(r, body: dict) -> dict:
+        return {"buckets": [
+            {"key": "-".join("*" if rg.get(k) is None else str(rg[k])
+                             for k in ("from", "to")),
+             "from": rg.get("from"), "to": rg.get("to"),
+             "doc_count": int(r[f"r{i}"])}
+            for i, rg in enumerate(body["ranges"])]}
+
+    @staticmethod
+    def _percentiles_exprs(col: Column, body: dict) -> list:
+        fracs = F.array(*[F.lit(p / 100.0) for p in _percents(body)])
+        return [_pctl_fn(body)(col.cast("double"), fracs).alias("v")]
+
+    @staticmethod
+    def _percentiles_shape(r, body: dict) -> dict:
+        pcts = _percents(body)
+        return {"values": {str(p): _opt_float(v) for p, v in
+                           zip(pcts, r["v"] or [None] * len(pcts))}}
+
+    @staticmethod
+    def _ranks_exprs(col: Column, body: dict) -> list:
+        v = col.cast("double")
+        return [(F.lit(100.0) * F.avg(F.when(v <= float(x), 1.0)
+                                      .otherwise(0.0))).alias(f"p{i}")
+                for i, x in enumerate(body["values"])]
+
+    @staticmethod
+    def _ranks_shape(r, body: dict) -> dict:
+        return {"values": {str(float(x)): _opt_float(r[f"p{i}"])
+                           for i, x in enumerate(body["values"])}}
+
+    @staticmethod
+    def _boxplot_exprs(col: Column, body: dict) -> list:
+        # ES boxplot: min / q1 / q2 / q3 / max in ONE aggregation
+        v = col.cast("double")
+        return [F.min(v).alias("mn"), F.max(v).alias("mx"),
+                _pctl_fn(body)(v, F.array(F.lit(0.25), F.lit(0.5),
+                                          F.lit(0.75))).alias("q")]
+
+    @staticmethod
+    def _boxplot_shape(r, body: dict) -> dict:
+        q = r["q"] or [None, None, None]
+        return {"min": r["mn"], "max": r["mx"],
+                "q1": q[0], "q2": q[1], "q3": q[2]}
+
+    @staticmethod
+    def _string_stats_exprs(col: Column, body: dict) -> list:
+        ln = F.length(col)
+        return [F.count(col).alias("count"), F.min(ln).alias("min_length"),
+                F.max(ln).alias("max_length"),
+                F.avg(ln.cast("double")).alias("avg_length")]
+
+    @staticmethod
+    def _extended_stats_exprs(col: Column, body: dict) -> list:
+        v = col.cast("double")
+        return _stats_cols(col) + [
+            F.sum(v * v).alias("sum_of_squares"),
+            F.var_pop(v).alias("variance"),
+            F.stddev_pop(v).alias("std_deviation")]
+
+    # ------------------------------ sibling pipeline reducers (driver)
+    def _best_bucket(self, kind, body, vv, pairs) -> dict:
+        if not vv:
+            return {"keys": [], "value": None}
+        best = max(vv) if kind == "max_bucket" else min(vv)
+        return {"keys": [k for k, v in pairs if v == best], "value": best}
+
+    def _stats_bucket(self, kind, body, vv, pairs) -> dict:
+        n = len(vv)
+        st = {"count": n, "min": min(vv) if vv else None,
+              "max": max(vv) if vv else None,
+              "avg": sum(vv) / n if vv else None,
+              "sum": sum(vv) if vv else None}
+        if kind == "extended_stats_bucket":
+            var = sum((x - st["avg"]) ** 2 for x in vv) / n if vv else None
+            st.update(sum_of_squares=sum(x * x for x in vv) if vv else None,
+                      variance=var,
+                      std_deviation=None if var is None else math.sqrt(var))
+        return st
+
+    def _percentiles_bucket(self, kind, body, vv, pairs) -> dict:
+        # exact linear-interpolated percentiles over the reduced bucket
+        # values (ES uses the same exact method — the input is tiny)
+        sv, vals = sorted(vv), {}
+        for p in _percents(body):
+            pos = (p / 100.0) * (len(sv) - 1)
+            lo, hi = int(math.floor(pos)), int(math.ceil(pos))
+            vals[str(p)] = (sv[lo] + (sv[hi] - sv[lo]) * (pos - lo)
+                            if sv else None)
+        return {"values": vals}
+
+    # The aggregation registry: one entry per kind, holding its
+    # validation and its plan (see _Agg).
+    _AGGS = {
+        "terms": _Agg(_check_field, _plan_terms, rule=_terms_order),
+        "histogram": _Agg(_check_field, _plan_histogram, _NUMERIC,
+                          _interval),
+        "date_histogram": _Agg(_check_field, _plan_date_histogram,
+                               ("date",), _calendar_unit),
+        "auto_date_histogram": _Agg(_check_field, _plan_auto_date_histogram,
+                                    ("date",), _check_buckets),
+        "rare_terms": _Agg(_check_field, _plan_rare_terms),
+        "composite": _Agg(_check_composite, _plan_composite),
+        "multi_terms": _Agg(_check_multi_terms, _plan_multi_terms),
+        "global": _Agg(_check_global, _plan_global),
+        "sampler": _Agg(_check_sampler, _plan_sampler),
+        "diversified_sampler": _Agg(_check_sampler, _plan_sampler),
+        "filters": _Agg(_check_filters, _plan_filters),
+        "adjacency_matrix": _Agg(_check_filters, _plan_adjacency_matrix),
+        "significant_terms": _Agg(
+            _check_significant, lambda s, n, k, b, m, c: s._sig_terms(b, m)),
+        "significant_text": _Agg(
+            _check_significant, lambda s, n, k, b, m, c: s._sig_text(b, m)),
+        "missing": _Agg(  # matched docs WITHOUT the field
+            _check_field, lambda s, n, k, b, m, c: {"doc_count": int(
+                m.filter(F.col(b["field"]).isNull()).count())}),
+        "top_metrics": _Agg(_check_top_metrics, _plan_top_metrics),
+        "weighted_avg": _Agg(
+            lambda s, n, k, b, a: s._numeric_parts(n, k, b,
+                                                   ("value", "weight")),
+            _plan_weighted_avg),
+        "t_test": _Agg(_check_t_test, _plan_t_test),
+        "matrix_stats": _Agg(_check_matrix_stats, _plan_matrix_stats),
+        "median_absolute_deviation": _Agg(_check_field, _plan_mad, _NUMERIC),
+        "string_stats": _Agg(_check_field, _plan_string_stats, ("text",),
+                             exprs=_string_stats_exprs),
+        "stats": _Agg(_check_field, _plan_metric, _NUMERIC,
+                      exprs=lambda c, b: _stats_cols(c)),
+        "extended_stats": _Agg(_check_field, _plan_metric, _NUMERIC,
+                               exprs=_extended_stats_exprs),
+        "avg": _Agg(_check_field, _plan_metric, _NUMERIC,
+                    exprs=lambda c, b: [F.avg(c).alias("value")]),
+        "sum": _Agg(_check_field, _plan_metric, _NUMERIC,
+                    exprs=lambda c, b: [F.sum(c).alias("value")]),
+        "min": _Agg(_check_field, _plan_metric, _NUMERIC,
+                    exprs=lambda c, b: [F.min(c).alias("value")]),
+        "max": _Agg(_check_field, _plan_metric, _NUMERIC,
+                    exprs=lambda c, b: [F.max(c).alias("value")]),
+        "value_count": _Agg(_check_field, _plan_metric,
+                            exprs=lambda c, b: [F.count(c).alias("value")]),
+        "cardinality": _Agg(
+            _check_field, _plan_metric,
+            exprs=lambda c, b: [(F.count_distinct(c) if b.get("exact") else
+                                 F.approx_count_distinct(c)).alias("value")]),
+        "percentiles": _Agg(_check_field, _plan_metric, _NUMERIC,
+                            exprs=_percentiles_exprs,
+                            shape=_percentiles_shape),
+        "percentile_ranks": _Agg(_check_field, _plan_metric, _NUMERIC,
+                                 _check_values, _ranks_exprs, _ranks_shape,
+                                 nonnull=True),
+        "range": _Agg(_check_field, _plan_metric, _NUMERIC, _check_ranges,
+                      _range_exprs, _range_shape),
+        "boxplot": _Agg(_check_field, _plan_metric, _NUMERIC,
+                        exprs=_boxplot_exprs, shape=_boxplot_shape),
+        "max_bucket": _Agg(_check_sibling, _best_bucket, sibling=True),
+        "min_bucket": _Agg(_check_sibling, _best_bucket, sibling=True),
+        "avg_bucket": _Agg(
+            _check_sibling, lambda s, k, b, vv, p: {
+                "value": sum(vv) / len(vv) if vv else None}, sibling=True),
+        "sum_bucket": _Agg(
+            _check_sibling, lambda s, k, b, vv, p: {
+                "value": sum(vv) if vv else None}, sibling=True),
+        "stats_bucket": _Agg(_check_sibling, _stats_bucket, sibling=True),
+        "extended_stats_bucket": _Agg(_check_sibling, _stats_bucket,
+                                      sibling=True),
+        "percentiles_bucket": _Agg(_check_sibling, _percentiles_bucket,
+                                   sibling=True),
+    }
 
     _SUBAGG_METRICS = ("avg", "sum", "min", "max", "value_count",
                        "stats", "cardinality")
 
     @classmethod
     def _sub_agg_plan(cls, name: str, body: dict) \
-            -> tuple[list[tuple[str, str, str]], tuple[str, int] | None]:
-        """Parse the ES sub-agg block of a bucket agg (one level)::
+            -> tuple[list[tuple[str, str, str]], tuple[str, int] | None,
+                     list[tuple[str, str, dict]]]:
+        """Parse (and fail-fast validate) the ES sub-agg block of a
+        bucket agg (one level)::
 
             {"terms": {"field": f, "aggs": {
                 "mean_v":  {"avg": {"field": g}},
                 "seen":    {"cardinality": {"field": h}},
-                "best":    {"top_hits": {"size": 3}}}}}
+                "best":    {"top_hits": {"size": 3}},
+                "run":     {"cumulative_sum": {"buckets_path": "_count"}}}}}
 
         Metric sub-aggs (avg/sum/min/max/value_count/stats/cardinality)
         compute IN THE SAME groupBy as the bucket — extra agg
         expressions riding the one hash aggregation, zero additional
         passes.  top_hits is the exception (per-bucket document fetch,
-        terms-only).  Returns (metrics, top_hits) where metrics is
-        [(sub_name, kind, field)] and top_hits is (sub_name, size)."""
+        terms-only).  PIPELINE sub-aggs — ES parent pipeline
+        aggregations (cumulative_sum / derivative / moving_fn /
+        bucket_sort / ...) — never touch the doc store: like ES's
+        coordinating-node reduce phase they run over the bucket agg's
+        ALREADY-REDUCED bucket list (cardinality = #buckets, bounded by
+        size/interval — never #docs), so they are pure driver-side
+        post-passes (``_apply_pipes``) and add zero distributed work at
+        any corpus scale.  Returns (metrics, top_hits, pipes): metrics
+        is [(sub_name, kind, field)], top_hits is (sub_name, size),
+        pipes is [(sub_name, kind, body)]."""
         sub = body.get("aggs") or {}
         metrics: list[tuple[str, str, str]] = []
         top_hits: tuple[str, int] | None = None
+        pipes: list[tuple[str, str, dict]] = []
         for sub_name, sub_spec in sub.items():
             if not isinstance(sub_spec, dict) or len(sub_spec) != 1:
                 raise A.QueryError(
@@ -3874,21 +3703,58 @@ class Searcher:
                         f"agg {name!r}: sub-agg {sub_name!r}: missing field")
                 metrics.append((sub_name, skind, sf))
             elif skind in cls._PIPE_KINDS:
-                continue  # parsed by _pipe_agg_plan (bucket aggs only)
+                pipes.append((sub_name, skind,
+                              cls._check_pipe(name, sub_name, skind,
+                                              sbody or {})))
             else:
                 raise A.QueryError(
                     f"agg {name!r}: sub-agg {sub_name!r}: unsupported "
                     f"kind {skind!r} (metrics "
                     f"{'/'.join(cls._SUBAGG_METRICS)}, pipeline "
                     f"{'/'.join(cls._PIPE_KINDS)}, or top_hits)")
-        return metrics, top_hits
+        return metrics, top_hits, pipes
+
+    @classmethod
+    def _check_pipe(cls, name: str, sub_name: str, skind: str,
+                    sbody: dict) -> dict:
+        """The body rules of one pipeline sub-agg; returns the body."""
+        if skind == "moving_fn":
+            fn = str(sbody.get("fn", "avg"))
+            if fn not in cls._MOVING_FNS:
+                raise A.QueryError(
+                    f"agg {name!r}: sub-agg {sub_name!r}: moving_fn "
+                    f"fn must be one of "
+                    f"{'/'.join(sorted(cls._MOVING_FNS))}")
+            if int(sbody.get("window", 5)) <= 0:
+                raise A.QueryError(
+                    f"agg {name!r}: sub-agg {sub_name!r}: window "
+                    f"must be > 0")
+        if skind == "bucket_sort":
+            for s in sbody.get("sort") or []:
+                if not isinstance(s, dict) or len(s) != 1:
+                    raise A.QueryError(
+                        f"agg {name!r}: sub-agg {sub_name!r}: each "
+                        f"sort entry is {{path: {{'order': ..}}}}")
+        if skind == "serial_diff" and int(sbody.get("lag", 1)) <= 0:
+            raise A.QueryError(
+                f"agg {name!r}: sub-agg {sub_name!r}: lag must "
+                f"be > 0")
+        if skind in ("bucket_script", "bucket_selector"):
+            bp = sbody.get("buckets_path")
+            if not isinstance(bp, dict) or not bp:
+                raise A.QueryError(
+                    f"agg {name!r}: sub-agg {sub_name!r}: {skind} "
+                    f"needs buckets_path as {{var: path}}")
+            if not sbody.get("script"):
+                raise A.QueryError(
+                    f"agg {name!r}: sub-agg {sub_name!r}: {skind} "
+                    f"needs a script")
+            cls._script_eval(str(sbody["script"]), None)  # shape
+        return sbody
 
     _PIPE_KINDS = ("cumulative_sum", "derivative", "moving_fn",
                    "bucket_sort", "serial_diff", "bucket_script",
                    "bucket_selector")
-    _SIBLING_KINDS = ("max_bucket", "min_bucket", "avg_bucket",
-                      "sum_bucket", "stats_bucket",
-                      "extended_stats_bucket", "percentiles_bucket")
     _MOVING_FNS = {"avg": lambda xs: sum(xs) / len(xs), "sum": sum,
                    "min": min, "max": max}
 
@@ -3966,59 +3832,6 @@ class Searcher:
                 f"(arithmetic/comparisons over buckets_path names only)")
         return ev(tree)
 
-    @classmethod
-    def _pipe_agg_plan(cls, name: str, body: dict) \
-            -> list[tuple[str, str, dict]]:
-        """Parse (and fail-fast validate) the PIPELINE sub-aggs of a
-        bucket agg — ES parent pipeline aggregations
-        (cumulative_sum / derivative / moving_fn / bucket_sort).  These
-        never touch the doc store: like ES's coordinating-node reduce
-        phase they run over the bucket agg's ALREADY-REDUCED bucket
-        list (cardinality = #buckets, bounded by size/interval — never
-        #docs), so they are pure driver-side post-passes and add zero
-        distributed work at any corpus scale."""
-        pipes: list[tuple[str, str, dict]] = []
-        for sub_name, sub_spec in (body.get("aggs") or {}).items():
-            if not isinstance(sub_spec, dict) or len(sub_spec) != 1:
-                continue  # shape errors raised by _sub_agg_plan
-            (skind, sbody), = sub_spec.items()
-            if skind not in cls._PIPE_KINDS:
-                continue
-            sbody = sbody or {}
-            if skind == "moving_fn":
-                fn = str(sbody.get("fn", "avg"))
-                if fn not in cls._MOVING_FNS:
-                    raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: moving_fn "
-                        f"fn must be one of "
-                        f"{'/'.join(sorted(cls._MOVING_FNS))}")
-                if int(sbody.get("window", 5)) <= 0:
-                    raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: window "
-                        f"must be > 0")
-            if skind == "bucket_sort":
-                for s in sbody.get("sort") or []:
-                    if not isinstance(s, dict) or len(s) != 1:
-                        raise A.QueryError(
-                            f"agg {name!r}: sub-agg {sub_name!r}: each "
-                            f"sort entry is {{path: {{'order': ..}}}}")
-            if skind == "serial_diff" and int(sbody.get("lag", 1)) <= 0:
-                raise A.QueryError(
-                    f"agg {name!r}: sub-agg {sub_name!r}: lag must "
-                    f"be > 0")
-            if skind in ("bucket_script", "bucket_selector"):
-                bp = sbody.get("buckets_path")
-                if not isinstance(bp, dict) or not bp:
-                    raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: {skind} "
-                        f"needs buckets_path as {{var: path}}")
-                if not sbody.get("script"):
-                    raise A.QueryError(
-                        f"agg {name!r}: sub-agg {sub_name!r}: {skind} "
-                        f"needs a script")
-                cls._script_eval(str(sbody["script"]), None)  # shape
-            pipes.append((sub_name, skind, sbody))
-        return pipes
 
     @staticmethod
     def _bpath(bucket: dict, path: str):
@@ -4138,11 +3951,7 @@ class Searcher:
         for i, (_, kind, f) in enumerate(metrics):
             c = F.col(f)
             if kind == "stats":
-                exprs += [F.count(c).alias(f"__s{i}_count"),
-                          F.min(c).alias(f"__s{i}_min"),
-                          F.max(c).alias(f"__s{i}_max"),
-                          F.avg(c).alias(f"__s{i}_avg"),
-                          F.sum(c).alias(f"__s{i}_sum")]
+                exprs += _stats_cols(c, f"__s{i}_")
             elif kind == "value_count":
                 exprs.append(F.count(c).alias(f"__s{i}_value"))
             elif kind == "cardinality":
@@ -4160,8 +3969,7 @@ class Searcher:
         out: dict = {}
         for i, (sub_name, kind, _) in enumerate(metrics):
             if kind == "stats":
-                out[sub_name] = {k: row[f"__s{i}_{k}"] for k in
-                                 ("count", "min", "max", "avg", "sum")}
+                out[sub_name] = {k: row[f"__s{i}_{k}"] for k in _STATS}
             elif kind in ("value_count", "cardinality"):
                 out[sub_name] = {"value": int(row[f"__s{i}_value"])}
             else:
